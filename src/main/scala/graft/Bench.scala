@@ -2,35 +2,48 @@ package graft
 import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 object Bench {
+
+  /** Run each named query once at `dir` so JIT and codegen compile its
+    * plan shapes before anything is timed; failures are ignored (the
+    * timed run reports them). NonFatal: a warmup OOM must abort, not
+    * leave a corrupted JVM producing garbage timings for the whole run.
+    */
+  def warm(spark: SparkSession, dir: String, names: Seq[String]): Unit = {
+    names.foreach { name =>
+      try SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count(): Unit
+      catch { case NonFatal(_) => }
+    }
+    spark.catalog.clearCache() // drop warmup-persisted intermediates
+  }
+
+  /** Seconds of one cache-cold execution of `name` at `dir`. Every run
+    * starts cache-cold: query bodies persist intermediates (qd04's
+    * signature relation, qs03's corpus, qd09's labels) that
+    * CacheManager keys on the logical plan, so a second rep — or a
+    * LATER query sharing a subplan — would read the first rep's cache
+    * and time warm storage instead of the engine. toRdd.count()
+    * materializes every output column of the physical plan; df.count()
+    * would let Catalyst prune the computed columns and time an emptied
+    * plan. Failures propagate.
+    */
+  def timeOnce(spark: SparkSession, name: String, dir: String): Double = {
+    spark.catalog.clearCache()
+    val t0 = System.nanoTime()
+    SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count()
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config(graft.util.Tables.nanosAsLongKey, "true")
-      // Explicit, not inherited from the JVM default: Tables.load's
-      // NTZ->TIMESTAMP relabel is value-identical only under UTC, and
-      // this main must measure the same plans Verify checks even when
-      // launched outside sbt's forked -Dspark.sql.session.timeZone=UTC.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Sessions.envCpus
+    val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Warmup at the smallest SF: JIT + codegen compile every plan shape
     // once so the timed loop measures steady-state execution, not
     // first-call compilation (order-independent timings).
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    if (new java.io.File(warmDir).isDirectory) {
-      SparkEntry.queries.foreach { case (_, fn) =>
-        // NonFatal: a warmup OOM must abort, not leave a corrupted JVM
-        // producing garbage timings for the whole run
-        try fn(spark, warmDir).queryExecution.toRdd.count()
-        catch { case NonFatal(_) => }
-      }
-      spark.catalog.clearCache() // drop warmup-persisted intermediates
-    }
+    if (new java.io.File(warmDir).isDirectory)
+      warm(spark, warmDir, SparkEntry.queries.keys.toSeq)
     // sorted order: stable run-to-run attribution. Each query is timed
     // `reps` times and the MIN reported as its headline number: this host
     // has ±2x wall-clock steal noise (Firecracker neighbor load), so a
@@ -70,21 +83,10 @@ object Bench {
     // Interleaving puts a query's reps in three disjoint weather windows:
     // min-of-reps now survives any storm shorter than a full pass.
     val samples: Seq[Seq[Option[(Double, Double)]]] = (1 to reps).map { _ =>
-      ordered.map { case (name, fn) =>
-        // Every rep starts cache-cold: query bodies persist intermediates
-        // (qd04's signature relation, qs03's corpus, qd09's labels) that
-        // CacheManager keys on the logical plan, so a second rep — or a
-        // LATER query sharing a subplan — would read the first rep's
-        // cache and time warm storage instead of the engine.
-        spark.catalog.clearCache()
+      ordered.map { case (name, _) =>
         val task0 = drained()
-        val t0 = System.nanoTime()
-        // toRdd.count() materializes every output column of the physical
-        // plan; df.count() would let Catalyst prune the computed columns
-        // and time an emptied plan.
         try {
-          fn(spark, sfDir).queryExecution.toRdd.count()
-          val wall = (System.nanoTime() - t0) / 1e9
+          val wall = timeOnce(spark, name, sfDir)
           // the bus drain happens AFTER the wall clock stops, so the
           // task-time accounting costs the timed number nothing
           Some((wall, (drained() - task0) / 1e3))
@@ -143,33 +145,6 @@ object Bench {
     // time: task_sec/wall ≈ effective parallelism, the scaling evidence
     // the wall-only artifact could not carry)
     println(s"""{"metric":"total_detail","value":$total,"unit":"sec","queries":${jmap(_._2)},"queries_med":${jmap(_._3)},"queries_task_sec":${jmap(_._4)},"reps":$reps,"runs":$runsJson,"rep_queries":$repMaps,"failed":$errs,"sf":"$sfDir"}""")
-    // …then an UNTIMED phase-profiled run of the lifecycle heavies:
-    // their headline seconds are dominated by per-wave commit machinery,
-    // and this block lets a reader attribute growth to a specific wave
-    // and phase (merge vs repair vs gold refresh) without re-running.
-    val heavies = Seq("q44_medallion_incremental", "q45_medallion_streamed")
-      .filter(SparkEntry.queries.contains)
-    if (heavies.nonEmpty) {
-      import graft.ecom.IncrementalLakehouse.StepProfile
-      val profiled = heavies.map { name =>
-        spark.catalog.clearCache()
-        StepProfile.drain() // discard anything stale
-        StepProfile.capture = true
-        try SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-        catch { case NonFatal(e) =>
-          System.err.println(s"[bench] phase profile of $name failed: ${e.getMessage}")
-        } finally StepProfile.capture = false
-        val byWave = StepProfile.drain().groupBy(_._1).toSeq.sortBy(_._1)
-        val wavesJson = byWave.map { case (wave, evs) =>
-          val phases = evs.map { case (_, p, sec) =>
-            "\"" + p + "\":" + ms(sec)
-          }.mkString("{", ",", "}")
-          s"""{"wave":$wave,"phases":$phases}"""
-        }.mkString("[", ",", "]")
-        "\"" + name + "\":" + wavesJson
-      }.mkString("{", ",", "}")
-      println(s"""{"metric":"phase_profile","unit":"sec","queries":$profiled,"sf":"$sfDir"}""")
-    }
     // …then the machine-readable line LAST, sized for the driver's
     // 2000-char stdout tail (r6's single full line was ~8 KB: the tail
     // cut its head and `parsed` came back null). Keys are each query's
@@ -199,7 +174,7 @@ object Bench {
       val cp = jar + java.io.File.pathSeparator + System.getProperty("java.class.path")
       val pb = new ProcessBuilder("java", "-cp", cp,
         "-Xmx16g", "graft.BenchServer", sfDir)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
+      pb.environment().put("SPARK_GRAFT_CPUS", cpus.toString)
       pb.redirectError(ProcessBuilder.Redirect.DISCARD)
       val proc = pb.start()
       val toChild = new java.io.PrintWriter(proc.getOutputStream, true)
@@ -228,14 +203,8 @@ object Bench {
             toChild.println(s"RUN $name")
             awaitLine("T ").drop(2).toDouble
           }
-          def runNew(): Double = {
-            spark.catalog.clearCache()
-            val t0 = System.nanoTime()
-            try {
-              SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-              (System.nanoTime() - t0) / 1e9
-            } catch { case NonFatal(_) => -1.0 }
-          }
+          def runNew(): Double =
+            try timeOnce(spark, name, sfDir) catch { case NonFatal(_) => -1.0 }
           val (o, n) =
             if (r % 2 == 1) { val a = runOld(); val b = runNew(); (a, b) }
             else { val b = runNew(); val a = runOld(); (a, b) }

@@ -2,8 +2,6 @@ package graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-
 /** Child-side of `graft.Bench`'s paired A/B mode: a long-lived JVM
   * whose classpath leads with a PRIOR round's jar (so `graft.*`
   * resolves to the old tree) timing one query per `RUN` line on its
@@ -24,15 +22,7 @@ object BenchServer {
   def main(args: Array[String]): Unit = {
     require(args.length == 1, "usage: BenchServer <sfDir>")
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config(graft.util.Tables.nanosAsLongKey, "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.envCpus)
     spark.sparkContext.setLogLevel("ERROR")
     val out = new java.io.PrintWriter(
       new java.io.OutputStreamWriter(System.out,
@@ -44,20 +34,12 @@ object BenchServer {
           out.println("Q " + SparkEntry.queries.keys.toSeq.sorted.mkString(","))
         case Array("WARM", dir) =>
           if (new java.io.File(dir).isDirectory)
-            SparkEntry.queries.foreach { case (_, fn) =>
-              try fn(spark, dir).queryExecution.toRdd.count(): Unit
-              catch { case NonFatal(_) => }
-            }
-          spark.catalog.clearCache()
+            Bench.warm(spark, dir, SparkEntry.queries.keys.toSeq)
           out.println("T 0")
         case Array("RUN", name) =>
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
           val sec =
-            try {
-              SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-              (System.nanoTime() - t0) / 1e9
-            } catch { case NonFatal(e) =>
+            try Bench.timeOnce(spark, name, sfDir)
+            catch { case NonFatal(e) =>
               System.err.println(s"[bench-server] $name failed: ${e.getMessage}")
               -1.0
             }

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   *    distribution) is exactly preserved while cross-copy cosines
   *    decorrelate.
   *
-  * Usage: sbt "runMain graft.ScaleSoak /root/testdata/sf0.1 SOAK.json"
+  * Usage: sbt "runMain graft.Dev scale <sf0.1-dir> SOAK.json"
   * (SPARK_GRAFT_CPUS and GRAFT_SOAK_DIR env knobs; synthesis is skipped
   * if the target dir carries a _SOAK_READY marker.)
   *
@@ -43,25 +43,11 @@ object ScaleSoak {
     "qs06_knn_join", "qt20_sequence_packing",
     "qv01_zorder_skip", "qv07_deletion_vectors")
 
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: graft.ScaleSoak <sf0.1-dir> <out.json> [query...]")
-    val src = args(0)
-    val outPath = args(1)
-    val names = if (args.length > 2) args.drop(2).toSeq else DefaultQueries
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
-
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config(graft.util.Tables.nanosAsLongKey, "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+  /** Synthesize the larger scales from `src`, time `names` at every
+    * scale and write the per-query factors to `outPath`.
+    */
+  def run(spark: SparkSession, src: String, outPath: String,
+      names: Seq[String]): Unit = {
     val base = sys.env.getOrElse("GRAFT_SOAK_DIR", "/tmp/graft_sf1")
     val decades = sys.env.getOrElse("GRAFT_SOAK_DECADES", "1").toInt
     require(decades >= 1 && decades <= 3, s"decades must be 1..3, got $decades")
@@ -82,7 +68,7 @@ object ScaleSoak {
     val results = names.map { name =>
       // one warmup (codegen+JIT) at the small scale, then min-of-2 per
       // scale (single shot at the largest — it dominates wall-clock) —
-      // the Prof discipline against host noise
+      // the `graft.Dev prof` discipline against host noise
       time(name, src)
       val samples = dirs.zipWithIndex.map { case (d, i) =>
         val reps = if (i == dirs.size - 1 && decades > 1) 1 else 2
@@ -106,7 +92,6 @@ object ScaleSoak {
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       json.getBytes("UTF-8"))
     println(s"SOAK written to $outPath")
-    spark.stop()
   }
 
   /** Build the 10× dataset (idempotent via marker file). `tag` makes

@@ -58,8 +58,8 @@ object DashboardSql {
        |  SUM(has_purchased) AS total_orders,
        |  ROUND(CAST(SUM(CAST(session_revenue AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_revenue,
        |  CASE WHEN SUM(has_purchased) = 0 THEN 0.0D
-       |    ELSE ROUND(CAST(SUM(CAST(session_revenue AS DECIMAL(18,2))) AS DOUBLE)
-       |      / CAST(SUM(has_purchased) AS DOUBLE), 2)
+       |    ELSE CAST(ROUND(CAST(SUM(CAST(session_revenue AS DECIMAL(18,2))) AS DECIMAL(18,2))
+       |      / CAST(SUM(has_purchased) AS DECIMAL(18,0)), 2) AS DOUBLE)
        |  END AS daily_aov,
        |  CASE WHEN COUNT(DISTINCT session_id) = 0 THEN 0.0D
        |    ELSE ROUND(CAST(SUM(has_purchased) AS DOUBLE) * 100.0D

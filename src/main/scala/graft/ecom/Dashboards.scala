@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.util.Exact.dsum
+import graft.util.Exact.{centsQuotient, dsum}
 
 /** The four parameterized BI queries (reference:
   * `/root/reference/analysis/dashboard_queries/` SQL files),
@@ -76,7 +76,7 @@ object Dashboards {
         round(col("rev"), 2).as("total_revenue"),
         // AOV divides the UNROUNDED revenue sum, as the reference does
         when(col("total_orders") === 0, lit(0.0))
-          .otherwise(round(col("rev") / col("total_orders"), 2)).as("daily_aov"),
+          .otherwise(centsQuotient(col("rev"), col("total_orders"))).as("daily_aov"),
         refRate(col("total_orders"), col("total_sessions")).as("session_conversion_rate"))
       .orderBy(col("session_date").desc)
 

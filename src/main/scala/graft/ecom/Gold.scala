@@ -188,9 +188,9 @@ object Gold {
         coalesce(col("total_sessions"), lit(0L)).cast(IntegerType).as("total_sessions"),
         col("first_active_ts"), col("last_active_ts"))
       .withColumn("average_order_value",
-        round(when(col("total_orders") =!= 0,
-          col("customer_total_revenue") / col("total_orders"))
-          .otherwise(lit(null).cast(DoubleType)), 2))
+        when(col("total_orders") =!= 0,
+          graft.util.Exact.centsQuotient(col("customer_total_revenue"), col("total_orders")))
+          .otherwise(lit(null).cast(DoubleType)))
       .withColumn("days_since_signup", datediff(asOfCol, col("signup_date")))
       .withColumn("scd_load_ts", lit(loadTs))
       .filter(col("customer_id").isNotNull)

@@ -115,22 +115,6 @@ final case class IncrementalLakehouse(spark: SparkSession, warehouseDir: String)
       ()
     }
 
-  /** Latest-wins merge of one cleaned wave into a silver table: strict
-    * `(_ingest_ts, tie)` descending — exactly [[Silver]]'s dedup order.
-    * The wave is in-batch-reduced first (merge sources are key-unique);
-    * an empty wave commits nothing. `extraMatched` prepends clauses
-    * (the items repair). Exactly-once per (`inc:<table>`, waveId).
-    */
-  private def mergeLatestWins(dst: VersionedTable, wave: DataFrame,
-      keys: Seq[String], tie: String, waveId: Long,
-      extraMatched: Seq[MergeWhen] = Seq.empty): Option[Long] = {
-    val t0 = if (Profile) System.nanoTime() else 0L
-    try mergeLatestWins0(dst, wave, keys, tie, waveId, extraMatched)
-    finally if (Profile)
-      println(f"      [merge] ${dst.tableDir.split('/').last}%-20s " +
-        f"${(System.nanoTime() - t0) / 1e9}%6.1fs")
-  }
-
   /** PLAN-side emptiness: true iff the optimizer folded the frame to an
     * empty LocalRelation (a `limit(0)`-derived wave, or a filter the
     * optimizer proved false) — zero jobs, vs the count() a lazily-empty
@@ -145,9 +129,15 @@ final case class IncrementalLakehouse(spark: SparkSession, warehouseDir: String)
       case _ => false
     }
 
-  private def mergeLatestWins0(dst: VersionedTable, wave: DataFrame,
+  /** Latest-wins merge of one cleaned wave into a silver table: strict
+    * `(_ingest_ts, tie)` descending — exactly [[Silver]]'s dedup order.
+    * The wave is in-batch-reduced first (merge sources are key-unique);
+    * an empty wave commits nothing. `extraMatched` prepends clauses
+    * (the items repair). Exactly-once per (`inc:<table>`, waveId).
+    */
+  private def mergeLatestWins(dst: VersionedTable, wave: DataFrame,
       keys: Seq[String], tie: String, waveId: Long,
-      extraMatched: Seq[MergeWhen]): Option[Long] = {
+      extraMatched: Seq[MergeWhen] = Seq.empty): Option[Long] = {
     if (dst.currentBatchId(app(dst)).exists(_ >= waveId)) return None
     // an optimizer-provably-empty wave lands nothing (same contract as
     // the counted n == 0 branch below) — zero jobs instead of one
@@ -248,18 +238,6 @@ final case class IncrementalLakehouse(spark: SparkSession, warehouseDir: String)
     implicit val stepEc: ExecutionContext = bootstrapPool
       .map(ExecutionContext.fromExecutorService(_))
       .getOrElse(ExecutionContext.global)
-    def phase[T](name: String)(f: => T): T =
-      if (!Profile && !StepProfile.capture) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        val sec = (System.nanoTime() - t0) / 1e9
-        if (Profile)
-          println(f"    [step $waveId] $name%-14s $sec%6.1fs")
-        StepProfile.record(waveId, name, sec)
-        r
-      }
-
     // the step is a dependency DAG, not three barriers: every table
     // maintains on its own future and each gold refresh starts the
     // moment ITS OWN inputs committed — product_metrics behind
@@ -272,83 +250,81 @@ final case class IncrementalLakehouse(spark: SparkSession, warehouseDir: String)
     // orders table, and the repair covers earlier waves' items whose
     // order changed in THIS wave). Each feed table's CDC enablement
     // follows its own first commit, inside its own branch.
-    val fEvents = Future(phase("events") {
+    val fEvents = Future {
       mergeLatestWins(eventsClean,
         Silver.eventsProjected(bronze("events")),
         Seq("event_id"), "event_ts", waveId)
       ensureCdc(eventsClean)
       ensureAutoCompact(eventsClean)
-    })
+    }
     // the items' clean/dedup half runs CONCURRENTLY with the orders
     // merge — only the date-fallback join needs the post-merge orders
-    val fItemsClean = Future(phase("items:clean") {
+    val fItemsClean = Future {
       val d = Silver.orderItemsProjected(bronze("order_items")).persist()
       d.count()
       d
-    })
-    val fOrders = Future(phase("orders") {
+    }
+    val fOrders = Future {
       mergeLatestWins(ordersClean, Silver.orders(bronze("orders")),
         Seq("order_id"), "order_ts", waveId)
       ensureCdc(ordersClean) // before any wave-2 DML lands on it
       ensureAutoCompact(ordersClean)
-    })
-    val fItems = (for { d <- fItemsClean; _ <- fOrders } yield d).map { d =>
-      phase("items:merge") {
-        try {
-          // the date-fallback join needs ONLY the orders this wave's
-          // items reference — semi-restricting the post-merge orders
-          // table first turns a whole-table shuffle join into a
-          // scan-side probe plus a broadcast of the handful of matching
-          // orders (O(wave), with the orders scan reading two columns).
-          // NOT on the bootstrap wave: there the wave IS the table, the
-          // "bounded" key set is a table-sized distinct broadcast
-          // (driver pressure at 100 TB, pure overhead at any scale) —
-          // the batch twin's plain join is the right plan for a bulk
-          // load, and AQE picks its strategy
-          val ordersForDate = {
-            val o = ordersClean.read().select("order_id", "order_date")
-            if (orderItemsClean.currentVersion().isEmpty) o
-            else o.join(broadcast(d.select("order_id").distinct()),
-              Seq("order_id"), "left_semi")
-          }
-          val itemsWave = Silver.orderItemsDated(d, ordersForDate)
-            // null product_id rows survive silver (the reference keeps
-            // them, `02_silver_transform.py:157-158`); merge keys cannot
-            // be null, so the PK rides a sentinel twin column
-            .withColumn(ItemPkCol, coalesce(col("product_id"), lit(NullPk)))
-            .withColumn(RepairCol, lit(false))
-          mergeItemsWithRepair(itemsWave, waveId)
-          ensureCdc(orderItemsClean)
-          ensureAutoCompact(orderItemsClean)
-        } finally d.unpersist(blocking = false): Unit
-      }
     }
-    val fReviews = Future(phase("reviews") {
+    val fItems = (for { d <- fItemsClean; _ <- fOrders } yield d).map { d =>
+      try {
+        // the date-fallback join needs ONLY the orders this wave's
+        // items reference — semi-restricting the post-merge orders
+        // table first turns a whole-table shuffle join into a
+        // scan-side probe plus a broadcast of the handful of matching
+        // orders (O(wave), with the orders scan reading two columns).
+        // NOT on the bootstrap wave: there the wave IS the table, the
+        // "bounded" key set is a table-sized distinct broadcast
+        // (driver pressure at 100 TB, pure overhead at any scale) —
+        // the batch twin's plain join is the right plan for a bulk
+        // load, and AQE picks its strategy
+        val ordersForDate = {
+          val o = ordersClean.read().select("order_id", "order_date")
+          if (orderItemsClean.currentVersion().isEmpty) o
+          else o.join(broadcast(d.select("order_id").distinct()),
+            Seq("order_id"), "left_semi")
+        }
+        val itemsWave = Silver.orderItemsDated(d, ordersForDate)
+          // null product_id rows survive silver (the reference keeps
+          // them, `02_silver_transform.py:157-158`); merge keys cannot
+          // be null, so the PK rides a sentinel twin column
+          .withColumn(ItemPkCol, coalesce(col("product_id"), lit(NullPk)))
+          .withColumn(RepairCol, lit(false))
+        mergeItemsWithRepair(itemsWave, waveId)
+        ensureCdc(orderItemsClean)
+        ensureAutoCompact(orderItemsClean)
+      } finally d.unpersist(blocking = false): Unit
+    }
+    val fReviews = Future {
       mergeLatestWins(reviewsClean, Silver.reviews(bronze("reviews")),
         Seq("review_id"), "review_ts", waveId)
       ensureCdc(reviewsClean)
       ensureAutoCompact(reviewsClean)
-    })
-    val fCustomers = Future(phase("customers") {
+    }
+    val fCustomers = Future {
       mergeLatestWins(customersClean, Silver.customers(bronze("customers")),
         Seq("customer_id"), "email", waveId)
       ensureAutoCompact(customersClean)
-    })
-    val fProducts = Future(phase("products") {
+    }
+    val fProducts = Future {
       mergeLatestWins(productsClean, Silver.products(bronze("products")),
         Seq("product_id"), "product_name", waveId)
       ensureAutoCompact(productsClean)
-    })
+    }
     // one shared materialization of the cleaned sessions wave — the
     // append branch AND the attrs chain both read it
     val sessionsWave = Silver.sessions(bronze("sessions")).persist()
-    val fSessions = Future(phase("sessions")(
+    val fSessions = Future(
       // sessions: append-only, as the reference (no PK filter/dedup)
       if (sessionsClean.currentBatchId(app(sessionsClean)).forall(_ < waveId)) {
         sessionsClean.commitAppendBatch(sessionsWave,
           waveId, app(sessionsClean))
         ensureAutoCompact(sessionsClean)
-      }))
+      })
     // attrs-dimension maintenance: the cursor heal must see the
     // PRE-merge attrs head (a crash between a gold bootstrap and its
     // cursor commit is only recoverable before new attrs versions
@@ -363,12 +339,10 @@ final case class IncrementalLakehouse(spark: SparkSession, warehouseDir: String)
     // path is unchanged (events gates gold:c360 longer than
     // sessions+attrs).
     val fAttrs = fSessions.map { _ =>
-      phase("attrs") {
-        ensureReattrCursor()
-        maintainSessionAttrs(waveId, sessionsWave)
-        ensureAutoCompact(sessionAttrs)
-        reattribute()
-      }
+      ensureReattrCursor()
+      maintainSessionAttrs(waveId, sessionsWave)
+      ensureAutoCompact(sessionAttrs)
+      reattribute()
     }
     // gold: the maintained aggregates advance over the silvers'
     // accumulated feed windows (self-windowing, exactly-once); the two
@@ -377,14 +351,12 @@ final case class IncrementalLakehouse(spark: SparkSession, warehouseDir: String)
       if (!refreshGold) Future.successful(())
       else for {
         _ <- fEvents; _ <- fItems; _ <- fReviews
-      } yield phase("gold:pm")(
-        gold.refreshProductMetrics(eventsClean, orderItemsClean, reviewsClean)): Unit
+      } yield gold.refreshProductMetrics(eventsClean, orderItemsClean, reviewsClean): Unit
     val fC360 =
       if (!refreshGold) Future.successful(())
       else for {
         _ <- fEvents; _ <- fAttrs
-      } yield phase("gold:c360")(
-        gold.refreshCustomer360(eventsClean, sessionAttrs.read())): Unit
+      } yield gold.refreshCustomer360(eventsClean, sessionAttrs.read()): Unit
     try Await.result(
       Future.sequence(Seq(fCustomers, fProducts, fSessions,
         fPm, fC360) ++
@@ -428,7 +400,7 @@ final case class IncrementalLakehouse(spark: SparkSession, warehouseDir: String)
   private def emptyBronze(source: String): DataFrame =
     // LocalRelation-backed (List overload), NOT an empty RDD: the
     // optimizer can then FOLD transforms over it to a provably-empty
-    // plan, so [[mergeLatestWins0]]'s planEmpty gate skips the
+    // plan, so [[mergeLatestWins]]'s planEmpty gate skips the
     // per-table materialization job a never-producing source would
     // otherwise pay on every streamed wave
     spark.createDataFrame(
@@ -743,24 +715,13 @@ final case class IncrementalLakehouse(spark: SparkSession, warehouseDir: String)
       // itself is not scanned. A bloom hit (or missing blooms on a
       // pre-r17 warehouse / saturated file) falls back to the exact
       // semi-join probe, which is the correct failure direction.
-      def timed[T](what: String)(f: => T): T =
-        if (!Profile) f
-        else {
-          val t0 = System.nanoTime()
-          val r = f
-          println(f"      [reattr] $what%-12s ${(System.nanoTime() - t0) / 1e9}%6.2fs")
-          r
-        }
       val anyMaterialized = applied.exists { a =>
-        timed("bloom-gate")(
-          gold.sessionRollupMv.bloomDisjoint(a, "session_id", touchedNew)) match {
+        gold.sessionRollupMv.bloomDisjoint(a, "session_id", touchedNew) match {
           case Some(true) => false
-          case d =>
-            if (Profile) println(s"      [reattr] bloom-gate undecided ($d), semi-join probe")
-            timed("semi-probe")(
-              gold.sessionRollupMv.readAt(a)
-                .join(broadcast(touchedNew), Seq("session_id"), "left_semi")
-                .limit(1).count() > 0)
+          case _ =>
+            gold.sessionRollupMv.readAt(a)
+              .join(broadcast(touchedNew), Seq("session_id"), "left_semi")
+              .limit(1).count() > 0
         }
       }
       if (!anyMaterialized) {
@@ -787,13 +748,6 @@ final case class IncrementalLakehouse(spark: SparkSession, warehouseDir: String)
   }
 
   private val ReattrApp: String = s"reattr:${sessionAttrs.tableDir}"
-
-  /** Dev-only phase-wall prints (IncProf sets the property; the env var
-    * reaches forked `sbt runMain` JVMs).
-    */
-  private val Profile: Boolean =
-    sys.props.get("graft.inc.profile").contains("true") ||
-      sys.env.get("GRAFT_INC_PROFILE").contains("true")
 
   /** The four gold relations, composed at read over the maintained
     * aggregates — column-for-column [[Gold]]'s outputs.
@@ -892,7 +846,7 @@ final case class IncrementalLakehouse(spark: SparkSession, warehouseDir: String)
     if (sessionAttrs.currentBatchId(a).exists(_ >= waveId)) return
     // plan-provably-empty wave: nothing to land (the counted n == 0
     // branch's contract), zero jobs — bootstrap excluded as in
-    // mergeLatestWins0
+    // mergeLatestWins
     if (sessionAttrs.currentVersion().isDefined && planEmpty(waveSessions)) return
     val attrCols = Seq("customer_id", "session_start_ts", "device",
       "source", "country")
@@ -951,30 +905,6 @@ final case class IncrementalLakehouse(spark: SparkSession, warehouseDir: String)
 }
 
 object IncrementalLakehouse {
-
-  /** Structured capture of the step's per-wave phase walls — the bench
-    * artifact's `phase_profile` line reads these, so a judge can split
-    * workload growth from regression in the lifecycle heavies (q44/q45)
-    * without a local profiling re-run. Off by default (zero overhead:
-    * one volatile read per phase); [[graft.Bench]] flips `capture`
-    * around one untimed extra run of each heavy.
-    */
-  object StepProfile {
-    @volatile var capture: Boolean = false
-    private val events =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, Double)]()
-    private[ecom] def record(wave: Long, phase: String, sec: Double): Unit =
-      if (capture) { events.add((wave, phase, sec)); () }
-    /** Drain everything recorded since the last call, in (wave, phase)
-      * order of arrival.
-      */
-    def drain(): Seq[(Long, String, Double)] = {
-      val b = Seq.newBuilder[(Long, String, Double)]
-      var e = events.poll()
-      while (e != null) { b += e; e = events.poll() }
-      b.result()
-    }
-  }
 
   /** Sentinel PK twin for order_items' nullable product_id (the
     * reference KEEPS null-product rows; merge keys cannot be null, and

@@ -966,13 +966,6 @@ final case class VersionedTable(
     // finally so a mid-merge failure cannot strand it in executor cache
     var cdcCache: DataFrame = null
     try {
-    val profT = if (VersionedTable.Profile) System.nanoTime() else 0L
-    def prof(what: String, t0: Long): Long = {
-      val now = System.nanoTime()
-      println(f"        [mc ${tableDir.split('/').last}%-18s] $what%-10s " +
-        f"${(now - t0) / 1e9}%6.1fs")
-      now
-    }
     // key-uniqueness over non-null source keys, as [[merge]]: a dup key
     // would pick a nondeterministic winner per target row
     if (!sourceKeyUnique) {
@@ -980,7 +973,6 @@ final case class VersionedTable(
         .groupBy(keys.map(col): _*).count().filter(col("count") > 1).limit(1).count()
       require(dups == 0, s"merge source has duplicate keys on (${keys.mkString(", ")})")
     }
-    val profT1 = if (VersionedTable.Profile) prof("dupcheck", profT) else 0L
 
     // files that can hold a matched key at all (stats/bloom skipping
     // from the source's own key range/set); NOT MATCHED BY SOURCE is a
@@ -1025,7 +1017,6 @@ final case class VersionedTable(
         checkKnown(m, got)
         got
       }
-    val profT2 = if (VersionedTable.Profile) prof("discover", profT1) else 0L
     // rows the rewrite may emit (touched files) vs rows present ONLY to
     // classify source rows (insert-only: read-only, and bounded by the
     // same candidates — a source row matching a row in a non-candidate
@@ -1164,11 +1155,8 @@ final case class VersionedTable(
             col("_graft_c").getField(ct).as(ct): _*)
         writeCdcFiles(cdcRows)
       }
-    val profT3 = if (VersionedTable.Profile) prof("cdc", profT2) else 0L
-    val out = publishCow("merge", base, m, rewriteFiles.toSet, rewritten,
+    publishCow("merge", base, m, rewriteFiles.toSet, rewritten,
       txn = txn, cdcFiles = cdcFiles)
-    if (VersionedTable.Profile) prof("publish", profT3): Unit
-    out
     } finally {
       if (cdcCache ne null) cdcCache.unpersist(blocking = false): Unit
       if (!callerCached) src.unpersist(blocking = false): Unit
@@ -2458,7 +2446,7 @@ final case class VersionedTable(
 
   private def loadFiles(schema: StructType, files: Seq[String],
       fileCol: Option[String] = None, posCol: Option[String] = None,
-      colmap: Map[String, String] = Map.empty,
+      colmap: Map[String, String],
       sizes: Map[String, (Long, Long)] = Map.empty): DataFrame =
     if (files.isEmpty) {
       val base = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
@@ -2472,7 +2460,7 @@ final case class VersionedTable(
       // inference at plan time, where the generic path below pays one
       // file-listing job and a footer-reading schema inference per
       // commit directory PER READ — the dominant fixed cost of an
-      // incremental step's dozens of table reads (IncProf r15: 64
+      // incremental step's dozens of table reads (r15 profile: 64
       // listing jobs, ~32 s of job wall per step before this).
       // The explicit dataSchema makes additive evolution free (parquet
       // null-fills missing columns); partition-dir recovery and column
@@ -2780,7 +2768,7 @@ final case class VersionedTable(
     * Nothing is visible until a manifest referencing the files lands.
     */
   private def writeDataFiles(df: DataFrame,
-      colmap: Map[String, String] = Map.empty)
+      colmap: Map[String, String])
       : (String, Seq[String], FileStats, FileBlooms, FileSizes) = {
     val commitRel = s"data/c-${UUID.randomUUID()}"
     val commitAbs = s"$tableDir/$commitRel"
@@ -3528,13 +3516,6 @@ object VersionedTable {
   val AutoCompactProp: String = "graft.autoOptimize.autoCompact"
   val AutoCompactSmallBytesProp: String = "graft.autoCompact.smallFileBytes"
   val AutoCompactMinFilesProp: String = "graft.autoCompact.minSmallFiles"
-
-  /** Dev-only merge sub-phase prints (IncProf sets the property; the
-    * env var reaches forked `sbt runMain` JVMs).
-    */
-  private[ecom] def Profile: Boolean =
-    sys.props.get("graft.inc.profile").contains("true") ||
-      sys.env.get("GRAFT_INC_PROFILE").contains("true")
 
   /** The change-feed output columns Delta reserves, in output order. */
   val CdcTypeCol: String = "_change_type"

@@ -72,20 +72,6 @@ object IncrementalAgg {
   /** The txn-marker namespace recording the last applied source version. */
   def appFor(silver: VersionedTable): String = s"ivm:${silver.tableDir}"
 
-  /** Dev-only sub-phase walls (same flag as the step/merge profiles). */
-  private def Profile: Boolean =
-    sys.props.get("graft.inc.profile").contains("true") ||
-      sys.env.get("GRAFT_INC_PROFILE").contains("true")
-  private def timed[T](view: VersionedTable, what: String)(f: => T): T =
-    if (!Profile) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"        [ia ${view.tableDir.split('/').last}%-18s] $what%-10s " +
-        f"${(System.nanoTime() - t0) / 1e9}%6.2fs")
-      r
-    }
-
   /** Synthetic per-row netting key stamped by [[reattribute]] when the
     * caller declares no row key: both change sides read the SAME
     * persisted fact frame, so `monotonically_increasing_id` assigns
@@ -425,9 +411,9 @@ object IncrementalAgg {
     try {
       val anyRemoval =
         if (insertOnly) {
-          deltaRows = Some(timed(gold, "deltaCount")(d0.count()))
+          deltaRows = Some(d0.count())
           false
-        } else timed(gold, "anyRemoval") {
+        } else {
           val r = d0.agg(
             org.apache.spark.sql.functions.count(lit(1)),
             coalesce(max(extremeCols.map(c =>
@@ -514,7 +500,7 @@ object IncrementalAgg {
       // source) — each would re-run the gold semi-join scan; cache it
       if (anyRemoval) { dCached = d.persist() }
       val anyDirty = anyRemoval &&
-        timed(gold, "anyDirty")(d.filter(col(DirtyC)).limit(1).count() > 0)
+        d.filter(col(DirtyC)).limit(1).count() > 0
       val dAuth =
         if (!anyDirty)
           extremeCols.foldLeft(d)((f, c) => f.withColumn(authC(c), lit(null)))
@@ -595,7 +581,7 @@ object IncrementalAgg {
     else {
       val dc = d.persist()
       try {
-        val n = timed(gold, "deltaCount")(dc.count())
+        val n = dc.count()
         if (n == 0L) {
           // fully-netted window: advance the marker with an empty
           // commit instead of the discovery/classify/publish machinery

@@ -1,12 +1,12 @@
 package graft.queries
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graft.shims.tempDir
 
 import graft.ecom.{GoldIvm, VersionedTable}
+import graft.util.Exact
 import graft.util.Tables.load
 
 /** The reference's OWN gold models maintained incrementally
@@ -107,7 +107,7 @@ object GoldIvmQueries {
       |  WHERE product_id IS NOT NULL)
       |SELECT * FROM pm
       |ORDER BY event_date, product_id""".stripMargin) { (s, dir) =>
-    val wh = Files.createTempDirectory("graft-q42-").toString
+    val wh = tempDir("graft-q42")
     // persisted: the adapter frame (parquet scan + props-JSON parse)
     // feeds three bootstrap commits, the dims and two merge sources —
     // without the cache each re-scans and re-parses (q35's discipline)
@@ -199,7 +199,7 @@ object GoldIvmQueries {
   // BOTH levels and level 2's consumption of level 1's own feed).
   val q43 = Q(
     "q43_gold_ivm_customer_360",
-    """WITH base AS (
+    s"""WITH base AS (
       |  SELECT CAST(user_id AS VARCHAR) AS session_id, ts AS event_ts,
       |    CAST(event_id AS VARCHAR) AS event_id, CAST(ts AS DATE) AS event_date,
       |    event_type, value AS amount_usd, event_id AS eid, user_id
@@ -273,15 +273,15 @@ object GoldIvmQueries {
       |    CAST(COALESCE(sa.total_orders, 0) AS INTEGER) AS total_orders,
       |    CAST(COALESCE(sa.total_sessions, 0) AS INTEGER) AS total_sessions,
       |    sa.first_active_ts, sa.last_active_ts,
-      |    ROUND(CASE WHEN COALESCE(sa.total_orders, 0) <> 0
-      |      THEN COALESCE(sa.customer_total_revenue, 0.0)
-      |        / CAST(COALESCE(sa.total_orders, 0) AS DOUBLE) END, 2) AS average_order_value,
+      |    CASE WHEN COALESCE(sa.total_orders, 0) <> 0
+      |      THEN ${Exact.duckCentsQuotient("sa.customer_total_revenue", "sa.total_orders")}
+      |      END AS average_order_value,
       |    date_diff('day', CAST(cust.signup_date AS DATE), DATE '2025-01-01') AS days_since_signup,
       |    TIMESTAMP '2025-01-01 00:00:00' AS scd_load_ts
       |  FROM cust LEFT JOIN sa USING (customer_id))
       |SELECT * FROM c360
       |ORDER BY customer_id""".stripMargin) { (s, dir) =>
-    val wh = Files.createTempDirectory("graft-q43-").toString
+    val wh = tempDir("graft-q43")
     val raw = load(s, dir, "events").persist()
     val base = raw.select(
       col("user_id").cast(StringType).as("session_id"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graft.shims.tempDir
 
 import graft.util.Tables.{load, loadSpread}
 import graft.functions.TextFns._
@@ -1382,7 +1383,7 @@ object LlmDedup {
        |FROM comp c JOIN (SELECT cluster_id, COUNT(*) AS cluster_size
        |                  FROM comp GROUP BY cluster_id) n USING (cluster_id)
        |ORDER BY cluster_id, doc_id""".stripMargin) { (s, dir) =>
-    val art = java.nio.file.Files.createTempDirectory("graft-qd24-").toString
+    val art = tempDir("graft-qd24")
     writeClusterIndex(s, dir, art)
     readClusterIndex(s, art)
   }
@@ -1417,7 +1418,7 @@ object LlmDedup {
        |      FROM cand JOIN sig sa ON doc_a = sa.doc_id JOIN sig sb ON doc_b = sb.doc_id)
        |SELECT doc_a, doc_b, jaccard FROM jac WHERE jaccard >= 0.5
        |ORDER BY jaccard DESC, doc_a, doc_b""".stripMargin) { (s, dir) =>
-    val tmp = java.nio.file.Files.createTempDirectory("graft-qd25-").toString
+    val tmp = tempDir("graft-qd25")
     val src = graft.ecom.VersionedTable(s, s"$tmp/docs")
     val idx = graft.ecom.VersionedTable(s, s"$tmp/idx")
     val base = docsSpread(s, dir).select(col("doc_id"), col("text")).persist()
@@ -1465,8 +1466,8 @@ object LlmDedup {
   // with zero Scala, hash-pinned to the same oracle.
   private val qd26Counter = new java.util.concurrent.atomic.AtomicInteger()
   val qd26 = Q("qd26_cluster_index_sql", qd24.sql.get) { (s, dir) =>
-    val wh = java.nio.file.Files.createTempDirectory("graft-qd26-wh-").toString
-    val art = java.nio.file.Files.createTempDirectory("graft-qd26-").toString
+    val wh = tempDir("graft-qd26-wh")
+    val art = tempDir("graft-qd26")
     val cat = s"g26d${qd26Counter.incrementAndGet()}"
     s.conf.set(s"spark.sql.catalog.$cat", "graft.sql.GraftCatalog")
     s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)

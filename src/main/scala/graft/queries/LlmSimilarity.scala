@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graft.shims.tempDir
 
-import graft.util.Tables.{load, loadSpread}
+import graft.util.Tables.load
 import graft.functions.VectorFns._
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -858,7 +859,7 @@ object LlmSimilarity {
   }
 
   val qs10 = Q("qs10_ann_ivf_artifact", Qs03Sql.sql) { (s, dir) =>
-    val art = java.nio.file.Files.createTempDirectory("graft-qs10-").toString
+    val art = tempDir("graft-qs10")
     writeIvfIndex(s, dir, art)
     readIvfTopK(s, art)
   }
@@ -888,7 +889,7 @@ object LlmSimilarity {
       |    AND NOT (vec_id % 9 = 5 AND vec_id >= 20)
       |  UNION ALL
       |  SELECT vec_id + 1000000, embedding, emb FROM e WHERE vec_id % 13 = 2),""".stripMargin)) { (s, dir) =>
-    val tmp = java.nio.file.Files.createTempDirectory("graft-qs11-").toString
+    val tmp = tempDir("graft-qs11")
     val src = graft.ecom.VersionedTable(s, s"$tmp/emb")
     val lists = graft.ecom.VersionedTable(s, s"$tmp/lists")
     val base = emb(s, dir).persist()
@@ -946,8 +947,8 @@ object LlmSimilarity {
   // qs03/qs10 (the probe must equal the library pipeline bit-for-bit).
   private val qs12Counter = new java.util.concurrent.atomic.AtomicInteger()
   val qs12 = Q("qs12_ivf_index_sql", Qs03Sql.sql) { (s, dir) =>
-    val wh = java.nio.file.Files.createTempDirectory("graft-qs12-wh-").toString
-    val art = java.nio.file.Files.createTempDirectory("graft-qs12-").toString
+    val wh = tempDir("graft-qs12-wh")
+    val art = tempDir("graft-qs12")
     val cat = s"g12s${qs12Counter.incrementAndGet()}"
     s.conf.set(s"spark.sql.catalog.$cat", "graft.sql.GraftCatalog")
     s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -1012,7 +1013,7 @@ object LlmSimilarity {
   // vector equal to the probe must surface at cos=1).
   private val qs13Counter = new java.util.concurrent.atomic.AtomicInteger()
   val qs13 = Q("qs13_ivf_search_sql", Qs03Sql.searchSql) { (s, dir) =>
-    val art = java.nio.file.Files.createTempDirectory("graft-qs13-").toString
+    val art = tempDir("graft-qs13")
     writeIvfIndex(s, dir, art)
     // face 1 — query table by name: the vec_id < 8 vectors as a view
     val vn = s"qs13_queries_${qs13Counter.incrementAndGet()}"

@@ -1,10 +1,9 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graft.shims.tempDir
 
 import graft.ecom.{Bronze, DqChecks, Gold, Lakehouse, Silver, VersionedPipe, VersionedTable}
 import graft.util.Exact.dsum
@@ -27,19 +26,6 @@ object Medallion {
 
   private val IngestTs = java.sql.Timestamp.valueOf("2024-02-01 00:00:00")
   private val AsOf = java.time.LocalDate.parse("2025-01-01")
-
-  /** Dev-only per-statement walls for the declared-gold run (same
-    * GRAFT_INC_PROFILE flag the step/merge profiles use).
-    */
-  private def timed[T](what: String)(f: => T): T =
-    if (!sys.env.get("GRAFT_INC_PROFILE").contains("true") &&
-        !sys.props.get("graft.inc.profile").contains("true")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"    [q46] $what%-18s ${(System.nanoTime() - t0) / 1e9}%6.2fs")
-      r
-    }
 
   /** Adapt the testdata event stream into the seven raw bronze sources
     * (same deterministic derivations as the q20–q23 e2e adapters, except
@@ -280,7 +266,7 @@ object Medallion {
   val q35 = Q("q35_medallion_e2e", medallionOracle) { (s, dir) =>
     // a fresh throwaway warehouse per invocation: the bench reps each
     // pay the full write cost (that IS what this query times)
-    val wh = Files.createTempDirectory("graft-medallion-").toString
+    val wh = tempDir("graft-medallion")
     // persist the shared adapter frame: the seven silver writes all
     // derive from it, and without the cache each re-scans the events
     // parquet and re-parses the props JSON (adapter cost, not pipeline
@@ -312,7 +298,7 @@ object Medallion {
     * scale where data dwarfs metadata.
     */
   val q41 = Q("q41_medallion_versioned", medallionOracle) { (s, dir) =>
-    val wh = Files.createTempDirectory("graft-medallion-vt-").toString
+    val wh = tempDir("graft-medallion-vt")
     val lh = Lakehouse(s, wh)
     val raw = rawEvents(s, dir).persist()
     val bronze = bronzeSources(raw)
@@ -410,7 +396,7 @@ object Medallion {
     * re-bootstrap).
     */
   val q44 = Q("q44_medallion_incremental", medallionOracle) { (s, dir) =>
-    val wh = Files.createTempDirectory("graft-medallion-inc-").toString
+    val wh = tempDir("graft-medallion-inc")
     val raw = rawEvents(s, dir).persist()
     val inFirst = to_date(col("ts")) <= lit("2024-01-15").cast(DateType)
     val waves = Seq(
@@ -472,7 +458,7 @@ object Medallion {
     * versioned batch, incremental waves, continuous stream.
     */
   val q45 = Q("q45_medallion_streamed", medallionOracle) { (s, dir) =>
-    val wh = Files.createTempDirectory("graft-medallion-str-").toString
+    val wh = tempDir("graft-medallion-str")
     val raw = rawEvents(s, dir).persist()
     val inFirst = to_date(col("ts")) <= lit("2024-01-15").cast(DateType)
     val waves = Seq(
@@ -512,7 +498,7 @@ object Medallion {
     * pipeline.
     */
   val q46 = Q("q46_medallion_declared_gold", medallionOracle) { (s, dir) =>
-    val tmp = Files.createTempDirectory("graft-medallion-dcl-").toString
+    val tmp = tempDir("graft-medallion-dcl")
     val wh = s"$tmp/lake"
     new java.io.File(s"$tmp/gold").mkdirs()
     val cat = s"g46c${q46Counter.incrementAndGet()}"
@@ -539,8 +525,8 @@ object Medallion {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
-      def refresh(v: String): Unit = timed(s"refresh:$v")(
-        s.sql(s"REFRESH MATERIALIZED VIEW $cat.gold.$v").collect()): Unit
+      def refresh(v: String): Unit =
+        s.sql(s"REFRESH MATERIALIZED VIEW $cat.gold.$v").collect(): Unit
       val fCascade = Future { refresh("attrs_dim"); refresh("crl2") }
       val fRest = Seq("em", "om", "rm").map(v => Future(refresh(v)))
       Await.result(Future.sequence(fCascade +: fRest), Duration.Inf): Unit
@@ -549,13 +535,13 @@ object Medallion {
     // wave 1 (silver only), then DECLARE the whole gold layer in SQL
     var seen: Option[DataFrame] = None
     def silverStep(b: Map[String, DataFrame], waveId: Long): Unit = {
-      timed(s"silver:$waveId")(inc.step(b, waveId, AsOf, LoadTs, refreshGold = false))
+      inc.step(b, waveId, AsOf, LoadTs, refreshGold = false)
       ()
     }
     silverStep(bronzeSources(waves(0)), 1L)
     seen = Some(waves(0)
       .select(col("user_id").cast(StringType).as("session_id")).distinct())
-    timed("declareGold")(declareGold(s, cat))
+    declareGold(s, cat)
     // waves 2–4: silver steps + bare declared refreshes (wave 3–4 are
     // the q44 attrs storm — sessions migrate customer and back, repaired
     // by the declared dimension rule, never a rebuild)
@@ -746,9 +732,9 @@ object Medallion {
          |  CAST(coalesce(total_orders, 0) AS INT) AS total_orders,
          |  CAST(coalesce(total_sessions, 0) AS INT) AS total_sessions,
          |  first_active_ts, last_active_ts,
-         |  round(CASE WHEN coalesce(total_orders, 0) <> 0
-         |    THEN coalesce(CAST(customer_total_revenue AS DOUBLE), 0.0) /
-         |      total_orders END, 2) AS average_order_value,
+         |  CASE WHEN coalesce(total_orders, 0) <> 0
+         |    THEN CAST(round(CAST(coalesce(customer_total_revenue, 0) AS DECIMAL(18,2)) /
+         |      CAST(total_orders AS DECIMAL(18,0)), 2) AS DOUBLE) END AS average_order_value,
          |  datediff(DATE '$AsOf', signup_date) AS days_since_signup,
          |  TIMESTAMP '$LoadTs' AS scd_load_ts
          |FROM $cat.lake.customers_clean LEFT JOIN $cat.gold.crl2

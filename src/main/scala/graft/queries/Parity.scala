@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -765,7 +765,7 @@ object Parity {
   // customer_360 gold relation (reference column set `:245-268`).
   // Builds on duckSessionMetrics' `sm`.
   private val duckCustomer360 =
-    """cust AS (
+    s"""cust AS (
       |  SELECT DISTINCT 'c' || CAST(user_id AS VARCHAR) AS customer_id,
       |    'user_' || CAST(user_id AS VARCHAR) AS name,
       |    CAST(user_id AS VARCHAR) || '@x.com' AS email,
@@ -788,9 +788,9 @@ object Parity {
       |    CAST(COALESCE(sa.total_orders, 0) AS INTEGER) AS total_orders,
       |    CAST(COALESCE(sa.total_sessions, 0) AS INTEGER) AS total_sessions,
       |    sa.first_active_ts, sa.last_active_ts,
-      |    ROUND(CASE WHEN COALESCE(sa.total_orders, 0) <> 0
-      |      THEN COALESCE(sa.customer_total_revenue, 0.0)
-      |        / CAST(COALESCE(sa.total_orders, 0) AS DOUBLE) END, 2) AS average_order_value,
+      |    CASE WHEN COALESCE(sa.total_orders, 0) <> 0
+      |      THEN ${duckCentsQuotient("sa.customer_total_revenue", "sa.total_orders")}
+      |      END AS average_order_value,
       |    date_diff('day', CAST(cust.signup_date AS DATE), DATE '2025-01-01') AS days_since_signup,
       |    TIMESTAMP '2025-01-01 00:00:00' AS scd_load_ts
       |  FROM cust LEFT JOIN sa USING (customer_id))""".stripMargin
@@ -1113,8 +1113,8 @@ object Parity {
        |  CAST(SUM(has_purchased) AS BIGINT) AS total_orders,
        |  ROUND(CAST(SUM(CAST(session_revenue AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_revenue,
        |  CASE WHEN SUM(has_purchased) = 0 THEN 0.0
-       |    ELSE ROUND(CAST(SUM(CAST(session_revenue AS DECIMAL(18,2))) AS DOUBLE)
-       |      / CAST(SUM(has_purchased) AS DOUBLE), 2) END AS daily_aov,
+       |    ELSE ${duckCentsQuotient("SUM(session_revenue)", "SUM(has_purchased)")}
+       |    END AS daily_aov,
        |  CASE WHEN COUNT(DISTINCT session_id) = 0 THEN 0.0
        |    ELSE ROUND(CAST(SUM(has_purchased) AS DOUBLE) * CAST(100.0 AS DOUBLE)
        |      / CAST(COUNT(DISTINCT session_id) AS DOUBLE), 2) END AS session_conversion_rate

@@ -1,9 +1,8 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.graft.shims.tempDir
 
 import graft.ecom.VersionedTable
 import graft.ops.ZOrder
@@ -48,7 +47,7 @@ object Versioned {
       |  UNION ALL
       |  SELECT 'suppkey' AS dim, * FROM sk) u
       |ORDER BY dim""".stripMargin) { (s, dir) =>
-    val vt = VersionedTable(s, Files.createTempDirectory("graft-qv01-").toString,
+    val vt = VersionedTable(s, tempDir("graft-qv01"),
       statsColumns = Seq("l_orderkey", "l_suppkey"))
     vt.commitOverwrite(ZOrder.cluster(
       load(s, dir, "lineitem"), Seq("l_orderkey", "l_suppkey"), numFiles = 16))
@@ -88,7 +87,7 @@ object Versioned {
       |  CAST(SUM(CAST(price AS DECIMAL(18,2))) AS DOUBLE) AS total_price
       |FROM merged GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
     val orders = load(s, dir, "orders")
-    val vt = VersionedTable(s, Files.createTempDirectory("graft-qv02-").toString)
+    val vt = VersionedTable(s, tempDir("graft-qv02"))
     vt.commitOverwrite(orders.filter(col("o_orderkey") % 4 =!= 0).select(
       col("o_orderkey"), col("o_orderstatus"),
       col("o_totalprice").cast(DoubleType).as("price")))
@@ -118,7 +117,7 @@ object Versioned {
       |GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, dir) =>
     val events = load(s, dir, "events")
       .select(col("event_id"), col("event_type"), col("value"))
-    val vt = VersionedTable(s, Files.createTempDirectory("graft-qv03-").toString)
+    val vt = VersionedTable(s, tempDir("graft-qv03"))
     vt.commitOverwrite(events.filter(col("event_id") % 10 < 7))
     vt.commitAppend(events.filter(col("event_id") % 10 >= 7))
     vt.readChangesSince(1L)
@@ -149,7 +148,7 @@ object Versioned {
       |    CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE)
       |  FROM part) u
       |ORDER BY rel""".stripMargin) { (s, dir) =>
-    val vt = VersionedTable(s, Files.createTempDirectory("graft-qv04-").toString,
+    val vt = VersionedTable(s, tempDir("graft-qv04"),
       statsColumns = Seq("p_size"))
     vt.commitOverwrite(load(s, dir, "part").select(
       col("p_partkey"), col("p_size"),
@@ -185,7 +184,7 @@ object Versioned {
     import graft.ecom.VersionedPipe
     val events = load(s, dir, "events")
       .select(col("event_id"), col("event_type"), col("value"))
-    val base = Files.createTempDirectory("graft-qv05-").toString
+    val base = tempDir("graft-qv05")
     val src = VersionedTable(s, s"$base/src")
     val dst = VersionedTable(s, s"$base/dst")
     val keep = (df: org.apache.spark.sql.DataFrame) =>
@@ -217,7 +216,7 @@ object Versioned {
       |GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, dir) =>
     val events = load(s, dir, "events")
       .select(col("event_id"), col("event_type"), col("value"))
-    val vt = VersionedTable(s, Files.createTempDirectory("graft-qv06-").toString)
+    val vt = VersionedTable(s, tempDir("graft-qv06"))
     (0 until 3).foreach(r =>
       vt.commitAppend(events.filter(col("event_id") % 3 === r).repartition(8)))
     vt.optimize()
@@ -265,7 +264,7 @@ object Versioned {
     val orders = load(s, dir, "orders").select(
       col("o_orderkey"), col("o_orderstatus"),
       col("o_totalprice").cast(DoubleType).as("price"))
-    val vt = VersionedTable(s, Files.createTempDirectory("graft-qv07-").toString)
+    val vt = VersionedTable(s, tempDir("graft-qv07"))
     vt.commitOverwrite(orders.filter(col("o_orderkey") % 3 =!= 0))           // v1
     vt.deleteMoR(col("o_orderkey") % 5 === 0)                                // v2
     vt.commitAppend(orders.filter(col("o_orderkey") % 3 === 0))              // v3
@@ -298,7 +297,7 @@ object Versioned {
       |ORDER BY doc_id""".stripMargin) { (s, dir) =>
     val docs = load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-    val vt = VersionedTable(s, Files.createTempDirectory("graft-qv08-").toString,
+    val vt = VersionedTable(s, tempDir("graft-qv08"),
       bloomColumns = Seq("doc_id"))
     vt.commitOverwrite(docs.repartition(16))
     Seq(7L, 123L, 404L, 999999L)
@@ -333,7 +332,7 @@ object Versioned {
       col("l_returnflag"), col("l_linestatus"))
     val withGross = li.withColumn("gross",
       col("l_extendedprice") * col("l_quantity"))
-    val vt = VersionedTable(s, Files.createTempDirectory("graft-qv09-").toString)
+    val vt = VersionedTable(s, tempDir("graft-qv09"))
     vt.commitOverwrite(withGross.filter(col("l_orderkey") % 2 === 1))       // v1
     vt.addGeneratedColumn("gross", "l_extendedprice * l_quantity")         // v2
     vt.commitAppend(li.filter(col("l_orderkey") % 2 === 0))                // v3: computed
@@ -383,7 +382,7 @@ object Versioned {
       |  FROM orders WHERE o_orderkey % 2 = 0)
       |SELECT snap, n_rows, sum_cust, total_price FROM agg
       |ORDER BY snap""".stripMargin) { (s, dir) =>
-    val wh = Files.createTempDirectory("graft-qv10-").toString
+    val wh = tempDir("graft-qv10")
     new java.io.File(s"$wh/db").mkdirs()
     val cat = s"g10c${q10Counter.incrementAndGet()}"
     s.conf.set(s"spark.sql.catalog.$cat", "graft.sql.GraftCatalog")
@@ -464,7 +463,7 @@ object Versioned {
       |  FROM base)
       |SELECT snap, n_rows, sum_cust, total_price FROM agg
       |ORDER BY snap""".stripMargin) { (s, dir) =>
-    val wh = Files.createTempDirectory("graft-qv11-").toString
+    val wh = tempDir("graft-qv11")
     new java.io.File(s"$wh/db").mkdirs()
     val cat = s"g11c${q10Counter.incrementAndGet()}"
     s.conf.set(s"spark.sql.catalog.$cat", "graft.sql.GraftCatalog")
@@ -557,7 +556,7 @@ object Versioned {
       |  FROM base)
       |SELECT snap, n_rows, sum_cust, total_price FROM agg
       |ORDER BY snap""".stripMargin) { (s, dir) =>
-    val wh = Files.createTempDirectory("graft-qv12-").toString
+    val wh = tempDir("graft-qv12")
     new java.io.File(s"$wh/db").mkdirs()
     val cat = s"g12c${q10Counter.incrementAndGet()}"
     s.conf.set(s"spark.sql.catalog.$cat", "graft.sql.GraftCatalog")
@@ -642,7 +641,7 @@ object Versioned {
       cdc.filter(col("event_id") > t1 && col("event_id") <= t2),
       cdc.filter(col("event_id") > t2))
     val vt = VersionedTable(s,
-      Files.createTempDirectory("graft-qv13-").toString)
+      tempDir("graft-qv13"))
     waves.zipWithIndex.foreach { case (w, i) =>
       val landed = vt.commitMergeBatch(
         graft.streaming.Sinks.latestWins(w, Seq("user_id"), col("event_id")),
@@ -712,7 +711,7 @@ object Versioned {
       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
       |FROM changes GROUP BY change_type, commit_version
       |ORDER BY commit_version, change_type""".stripMargin) { (s, dir) =>
-    val wh = Files.createTempDirectory("graft-qv14-").toString
+    val wh = tempDir("graft-qv14")
     new java.io.File(s"$wh/db").mkdirs()
     val cat = s"g14c${q10Counter.incrementAndGet()}"
     s.conf.set(s"spark.sql.catalog.$cat", "graft.sql.GraftCatalog")
@@ -786,7 +785,7 @@ object Versioned {
       |  UNION ALL SELECT * FROM merge_src)
       |SELECT grp, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(price) AS DOUBLE) AS total
       |FROM final GROUP BY grp ORDER BY grp""".stripMargin) { (s, dir) =>
-    val tmp = Files.createTempDirectory("graft-qv15-").toString
+    val tmp = tempDir("graft-qv15")
     val silver = VersionedTable(s, s"$tmp/silver")
     val gold = VersionedTable(s, s"$tmp/gold")
     val base = load(s, dir, "orders").filter(col("o_orderkey") <= 4000)
@@ -856,7 +855,7 @@ object Versioned {
       |  CAST(MIN(price) AS DOUBLE) AS lo,
       |  CAST(MAX(price) AS DOUBLE) AS hi
       |FROM final GROUP BY grp ORDER BY grp""".stripMargin) { (s, dir) =>
-    val wh = Files.createTempDirectory("graft-qv16-").toString
+    val wh = tempDir("graft-qv16")
     new java.io.File(s"$wh/db").mkdirs()
     val cat = s"g16c${q10Counter.incrementAndGet()}"
     s.conf.set(s"spark.sql.catalog.$cat", "graft.sql.GraftCatalog")
@@ -908,11 +907,11 @@ object Versioned {
       |FROM orders WHERE o_orderkey % 3 = 0
       |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
     val orders = load(s, dir, "orders")
-    val src = VersionedTable(s, Files.createTempDirectory("graft-qv17s-").toString)
+    val src = VersionedTable(s, tempDir("graft-qv17s"))
     src.commitOverwrite(orders.filter(col("o_orderkey") % 3 === 0).select(
       col("o_orderkey"), col("o_orderstatus"),
       col("o_totalprice").cast(DoubleType).as("price")))
-    val clone = src.cloneTo(Files.createTempDirectory("graft-qv17c-").toString)
+    val clone = src.cloneTo(tempDir("graft-qv17c"))
     // the source moves on and erases the cloned snapshot from its log
     src.delete(col("o_orderkey") % 2 === 0)
     src.commitAppend(orders.filter(col("o_orderkey") % 3 =!= 0)
@@ -964,7 +963,7 @@ object Versioned {
       |FROM fact2 LEFT JOIN dim2 USING (pk)
       |WHERE qty > 2
       |GROUP BY brand_key ORDER BY brand_key""".stripMargin) { (s, dir) =>
-    val wh = Files.createTempDirectory("graft-qv18-").toString
+    val wh = tempDir("graft-qv18")
     new java.io.File(s"$wh/db").mkdirs()
     val cat = s"g18c${q10Counter.incrementAndGet()}"
     s.conf.set(s"spark.sql.catalog.$cat", "graft.sql.GraftCatalog")
@@ -1043,7 +1042,7 @@ object Versioned {
       |  FROM l1 GROUP BY bucket)
       |SELECT bucket, n_groups, total_rev, min_rows, max_q
       |FROM l2 ORDER BY bucket""".stripMargin) { (s, dir) =>
-    val wh = Files.createTempDirectory("graft-qv19-").toString
+    val wh = tempDir("graft-qv19")
     new java.io.File(s"$wh/db").mkdirs()
     val cat = s"g19c${q10Counter.incrementAndGet()}"
     s.conf.set(s"spark.sql.catalog.$cat", "graft.sql.GraftCatalog")
@@ -1122,7 +1121,7 @@ object Versioned {
       |  CAST(coalesce(units, 0) AS BIGINT) AS units
       |FROM ma FULL OUTER JOIN mb USING (pk) LEFT JOIN dim USING (pk)
       |ORDER BY pk""".stripMargin) { (s, dir) =>
-    val wh = Files.createTempDirectory("graft-qv20-").toString
+    val wh = tempDir("graft-qv20")
     new java.io.File(s"$wh/db").mkdirs()
     val cat = s"g20c${q10Counter.incrementAndGet()}"
     s.conf.set(s"spark.sql.catalog.$cat", "graft.sql.GraftCatalog")
@@ -1202,7 +1201,7 @@ object Versioned {
       |  CAST(COUNT(vr) AS BIGINT) AS n_verified,
       |  CAST(SUM(units) AS BIGINT) AS total_units
       |FROM f GROUP BY pk ORDER BY pk""".stripMargin) { (s, dir) =>
-    val wh = Files.createTempDirectory("graft-qv21-").toString
+    val wh = tempDir("graft-qv21")
     new java.io.File(s"$wh/db").mkdirs()
     val cat = s"g21c${q10Counter.incrementAndGet()}"
     s.conf.set(s"spark.sql.catalog.$cat", "graft.sql.GraftCatalog")
@@ -1264,7 +1263,7 @@ object Versioned {
       |  ('p3_top_refreshed', 'ml2', CAST(0 AS BIGINT), false)
       |) t(phase, view, lag, stale)
       |ORDER BY phase, view""".stripMargin) { (s, dir) =>
-    val wh = Files.createTempDirectory("graft-qv22-").toString
+    val wh = tempDir("graft-qv22")
     new java.io.File(s"$wh/db").mkdirs()
     val cat = s"g22c${q10Counter.incrementAndGet()}"
     s.conf.set(s"spark.sql.catalog.$cat", "graft.sql.GraftCatalog")
@@ -1323,7 +1322,7 @@ object Versioned {
       |  ('show:sm2', 'true')
       |) t(k, v)
       |ORDER BY k""".stripMargin) { (s, dir) =>
-    val wh = Files.createTempDirectory("graft-qv23-").toString
+    val wh = tempDir("graft-qv23")
     new java.io.File(s"$wh/db").mkdirs()
     val cat = s"g23c${q10Counter.incrementAndGet()}"
     s.conf.set(s"spark.sql.catalog.$cat", "graft.sql.GraftCatalog")

@@ -1,8 +1,8 @@
 package graft.util
 
-/** JSON string escape + oracle_sql.json assembly shared by the Verify
-  * and Repro mains — ONE definition, because an escaping gap in either
-  * copy would emit invalid JSON and silently zero the driver's
+/** JSON string escape + oracle_sql.json assembly shared by Verify and
+  * `graft.Dev repro` — ONE definition, because an escaping gap in
+  * either copy would emit invalid JSON and silently zero the driver's
   * correctness gate for that path. Escapes backslash, quote, and ALL
   * control chars (< 0x20): a tab or CR in builder-authored SQL is the
   * realistic hazard.

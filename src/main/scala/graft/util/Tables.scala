@@ -90,6 +90,26 @@ object Exact {
   def davg(c: Column, scale: Int = 2): Column =
     dsum(c, scale) / count(c)
 
+  /** Cent-exact money `amount` over the whole count `n`, rounded half
+    * up (away from zero) to cents, as DOUBLE. The quotient is exact: a
+    * double quotient can land below a half-cent tie and round a cent low
+    * (1526.35 / 14 = 109.025 is 109.02499999999999 as a double).
+    * DECIMAL(18,2) / DECIMAL(18,0) keeps 21 fractional digits, and a
+    * quotient that is not a tie lies at least 1 / (200 n) from one.
+    */
+  def centsQuotient(amount: Column, n: Column): Column =
+    round(amount.cast(DecimalType(18, 2)) / n.cast(DecimalType(18, 0)), 2)
+      .cast(DoubleType)
+
+  /** DuckDB SQL twin of [[centsQuotient]] over SQL expressions. DuckDB
+    * divides DECIMALs as DOUBLE, so the quotient is taken in whole
+    * cents with integer division instead.
+    */
+  def duckCentsQuotient(amount: String, n: String): String = {
+    val c = s"CAST(CAST($amount AS DECIMAL(18,2)) * 100 AS BIGINT)"
+    s"CAST(SIGN($c) * ((2 * ABS($c) + ($n)) // (2 * ($n))) AS DOUBLE) / 100"
+  }
+
   /** Conditional long count: SUM(CASE WHEN cond THEN 1 ELSE 0 END). */
   def countIf(cond: Column): Column =
     sum(when(cond, 1L).otherwise(0L))

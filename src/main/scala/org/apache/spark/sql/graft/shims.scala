@@ -71,4 +71,12 @@ object shims {
     */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** A new directory `<java.io.tmpdir>/<prefix>-<uuid>` for a query's
+    * scratch warehouse, created through Spark's `private[spark]`
+    * `Utils.createTempDir`, which registers it with Spark's shutdown
+    * hook: the directory is deleted when the JVM exits.
+    */
+  def tempDir(prefix: String): String =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix).getAbsolutePath
 }

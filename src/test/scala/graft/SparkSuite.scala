@@ -11,13 +11,6 @@ trait SparkSuite extends AnyFunSuite {
 }
 
 object SparkSuite {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config(graft.util.Tables.nanosAsLongKey, "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  val Cpus: Int = 4
+  lazy val session: SparkSession = Sessions.local(Cpus)
 }

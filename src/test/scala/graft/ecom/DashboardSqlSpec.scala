@@ -43,6 +43,24 @@ class DashboardSqlSpec extends SparkSuite {
       "04 customer_360_top")
   }
 
+  test("sales overview: daily AOV is the exact quotient rounded half up, on both surfaces") {
+    import spark.implicits._
+    // 1526.35 / 14 = 109.025 (109.02499999999999 as a double quotient)
+    // and 262.90 / 4 = 65.725: half-cent ties, both rounded up
+    val sessions = (
+      (1 to 14).map(i => ("2025-01-10", s"a$i", 1, if (i == 14) 226.35 else 100.00)) ++
+        (1 to 4).map(i => ("2025-01-11", s"b$i", 1, if (i == 4) 67.90 else 65.00)))
+      .toDF("session_date", "session_id", "has_purchased", "session_revenue")
+      .withColumn("session_date", $"session_date".cast("date"))
+    def aov(df: DataFrame): Seq[Double] = df.collect().map(_.getAs[Double]("daily_aov")).toSeq
+    sessions.createOrReplaceTempView("session_metrics")
+    try {
+      assert(aov(DashboardSql.run(spark, DashboardSql.salesOverview, start, end)) ==
+        Seq(65.73, 109.03))
+      assert(aov(Dashboards.salesOverview(sessions, start, end)) == Seq(65.73, 109.03))
+    } finally Lakehouse(spark, "unused").registerViews(gold)
+  }
+
   test("the named parameters actually bind: shifting the window changes the result") {
     Lakehouse(spark, "unused").registerViews(gold)
     val jan7 = DashboardSql.run(spark, DashboardSql.salesOverview,

@@ -44,7 +44,9 @@ class GoldIvmSpec extends SparkSuite {
   private val attrs = Seq(
     ("s1", "c1", ts("2024-01-01 09:59:00")),
     ("s3", "c3", ts("2024-01-02 00:00:00")), // all-null-ts session: filtered
-    ("s4", "c4", ts("2024-01-03 07:59:00")))
+    ("s4", "c4", ts("2024-01-03 07:59:00")),
+    ("s5", "c5", ts("2024-01-09 07:59:00")),
+    ("s6", "c6", ts("2024-01-09 07:59:00")))
     .toDF("session_id", "customer_id", "session_start_ts")
     .withColumn("device", lit("web")).withColumn("source", lit("ads"))
     .withColumn("country", lit("US"))
@@ -53,6 +55,8 @@ class GoldIvmSpec extends SparkSuite {
     ("c1", "alice", "a@x.com", "US", 30, "2023-05-01", true),
     ("c3", "carol", "c@x.com", "US", 41, "2023-06-01", false),
     ("c4", "dave", "d@x.com", "US", 28, "2023-07-01", true),
+    ("c5", "fred", "f@x.com", "US", 33, "2023-09-01", true),
+    ("c6", "gina", "g@x.com", "US", 47, "2023-10-01", false),
     ("c9", "erin", "e@x.com", "US", 55, "2023-08-01", false)) // no sessions
     .toDF("customer_id", "name", "email", "country", "age", "signup_date",
       "marketing_opt_in")
@@ -146,8 +150,23 @@ class GoldIvmSpec extends SparkSuite {
       ("e30", "s1", ts("2024-01-09 10:00:00"), "purchase", "p1", 3.00),
       ("e31", "s7", ts("2024-01-09 11:00:00"), "page_view", "p1", null),
       ("e32", null, ts("2024-01-09 12:00:00"), "purchase", "p2", 1.25))))
+    // half-cent AOV ties: 1526.35 / 14 = 109.025 (109.02499999999999 as
+    // a double quotient) and 262.90 / 4 = 65.725, both rounded half up
+    def purchases(s: String, amounts: Seq[Double]) = amounts.zipWithIndex.map { case (a, i) =>
+      (s"$s-$i", s, ts(f"2024-01-09 10:$i%02d:00"), "purchase", "p1", java.lang.Double.valueOf(a))
+    }
+    events.commitAppend(eventsDf(
+      purchases("s5", Seq.fill(13)(100.00) :+ 226.35) ++
+        purchases("s6", Seq.fill(3)(65.00) :+ 67.90)))
     refresh()
     assert(asSet(ivm.customer360(customers, AsOf, LoadTs)) == expected)
+    def aov(df: DataFrame): Map[String, Double] =
+      df.filter(col("customer_id").isin("c5", "c6")).collect()
+        .map(r => r.getAs[String]("customer_id") -> r.getAs[Double]("average_order_value")).toMap
+    val pinned = Map("c5" -> 109.03, "c6" -> 65.73)
+    assert(aov(ivm.customer360(customers, AsOf, LoadTs)) == pinned)
+    assert(aov(Gold.customer360(
+      customers, Gold.sessionMetrics(events.read(), attrs), AsOf, LoadTs)) == pinned)
 
     // idempotence: nothing new -> no commits on either level
     val v1 = ivm.sessionRollupMv.versions()

@@ -36,8 +36,9 @@ class GraphOpsSpec extends SparkSuite {
       GraphOps.connectedComponents(edges, "s", "d", maxRounds = 2)
     }
     // the failure path must unpersist both the edge list and the last
-    // label frame — a long-running session (Bench/Prof) would otherwise
-    // accumulate dead cache entries on every failed invocation
+    // label frame — a long-running session (Bench, `graft.Dev prof`)
+    // would otherwise accumulate dead cache entries on every failed
+    // invocation
     assert(spark.sharedState.cacheManager.isEmpty,
       "non-convergence leaked persisted frames in the cache manager")
   }

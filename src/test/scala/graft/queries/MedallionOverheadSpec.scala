@@ -7,8 +7,9 @@ import graft.SparkSuite
   * medallion through VersionedTable commits — manifest I/O, CAS
   * publishes, incremental pipe checkpoints) must stay within 1.5× of
   * q35 (the same derivations through plain parquet writes), measured
-  * warmed and in-JVM (the Prof discipline — wall-clock noise on this
-  * host is ±2×, so each side takes min-of-reps after a warmup run).
+  * warmed and in-JVM (the `graft.Dev prof` discipline — wall-clock
+  * noise on this host is ±2×, so each side takes min-of-reps after a
+  * warmup run).
   * Measured headroom is wide (the two are near-equal at this SF: the
   * format's overhead is metadata-bounded and amortizes), so a red here
   * means manifest handling genuinely regressed, not host weather.
@@ -19,14 +20,8 @@ class MedallionOverheadSpec extends SparkSuite {
   private val MaxRatio = 1.5
 
   private def minSeconds(name: String, reps: Int): Double = {
-    val fn = graft.SparkEntry.queries(name)
-    fn(spark, sfDir).queryExecution.toRdd.count() // warmup: codegen + JIT
-    (1 to reps).map { _ =>
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).queryExecution.toRdd.count()
-      (System.nanoTime() - t0) / 1e9
-    }.min
+    graft.Bench.warm(spark, sfDir, Seq(name))
+    Seq.fill(reps)(graft.Bench.timeOnce(spark, name, sfDir)).min
   }
 
   test(s"versioned medallion (q41) stays within ${MaxRatio}x of parquet medallion (q35)") {
