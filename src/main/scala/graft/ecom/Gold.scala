@@ -30,6 +30,13 @@ import graft.util.Exact.{countIf, dsumIf}
   *    replaced by `min` (deterministic `first` — the one deliberate
   *    deviation, documented at the call site).
   *
+  * Each model is an aggregation followed by a compose step
+  * (`composeProductMetrics`, `composeSessionMetrics`,
+  * `composeCustomer360`): the reference's final select list — zero-fill
+  * casts, dimension joins, fallbacks, filters and derived columns —
+  * written once. [[GoldIvm]] feeds the same compose steps its maintained
+  * aggregates instead of recomputed ones.
+  *
   * Scale notes: event/order aggregates shuffle once on their group keys;
   * catalog-bounded product/review dims are broadcast by hint, while
   * fact-sized sides (sessions, customers) are left to AQE's size-based
@@ -43,7 +50,9 @@ import graft.util.Exact.{countIf, dsumIf}
 object Gold {
 
   /** product_metrics (`03_gold_aggregate.py:38-110`), partitioned by
-    * event_date downstream. Output columns exactly `:93-108`.
+    * event_date downstream: the event and order aggregates, FULL OUTER
+    * USING-joined (`:78`), and the review aggregate, composed by
+    * [[composeProductMetrics]].
     */
   def productMetrics(eventsClean: DataFrame, orderItemsClean: DataFrame,
       productsClean: DataFrame, reviewsClean: DataFrame): DataFrame = {
@@ -60,12 +69,25 @@ object Gold {
         graft.util.Exact.dsum(col("line_total_usd")).as("total_revenue"),
         sum(col("quantity")).cast(LongType).as("purchase_count"))
       .withColumnRenamed("order_date", "event_date")
-    val productAttrs = productsClean.select("product_id", "category", "product_name")
     val reviewMetrics = reviewsClean
       .groupBy(col("product_id"))
       .agg(avg(col("rating")).as("avg_rating"), count(col("review_id")).as("review_count"))
-    eventMetrics
-      .join(orderMetrics, Seq("event_date", "product_id"), "full_outer")
+    composeProductMetrics(
+      eventMetrics.join(orderMetrics, Seq("event_date", "product_id"), "full_outer"),
+      productsClean, reviewMetrics)
+  }
+
+  /** product_metrics' final select list (`:84-108`) over its aggregates,
+    * shared by the recompute and [[GoldIvm]]. `metrics`: the full outer
+    * join of the event and order aggregates (`event_date`, `product_id`,
+    * nullable `view_count`, `cart_count`, `purchase_count`,
+    * `total_revenue`); `reviewMetrics`: `product_id`, `avg_rating`,
+    * `review_count` per reviewed product.
+    */
+  def composeProductMetrics(metrics: DataFrame, productsClean: DataFrame,
+      reviewMetrics: DataFrame): DataFrame = {
+    val productAttrs = productsClean.select("product_id", "category", "product_name")
+    metrics
       .select(
         col("event_date"), col("product_id"),
         coalesce(col("view_count"), lit(0L)).cast(IntegerType).as("view_count"),
@@ -109,73 +131,107 @@ object Gold {
       funnelPct(col("purchase_count"), col("view_count")).as("overall_conversion_pct"))
 
   /** session_metrics (`03_gold_aggregate.py:163-211`): batch min/max
-    * sessionization of the event stream + session-attribute left join.
-    * `has_purchased` is the purchase-event COUNT per session (`:173-176`
-    * — NOT a 0/1 flag; customer_360's total_orders sums it), the
-    * start-ts coalesce prefers the EVENTS min (`:192-197`), and
-    * customer/device/source/country fall back to 'UNKNOWN' (`:190,
-    * 199-201`). No session_id filter: the reference groups null session
-    * ids like any other key (`:165`).
+    * sessionization of the event stream, composed with the session
+    * attributes by [[composeSessionMetrics]]. `has_purchased` is the
+    * purchase-event COUNT per session (`:173-176` — NOT a 0/1 flag;
+    * customer_360's total_orders sums it). No session_id filter: the
+    * reference groups null session ids like any other key (`:165`).
     */
-  def sessionMetrics(eventsClean: DataFrame, sessionsClean: DataFrame): DataFrame = {
-    val agg = eventsClean
-      .groupBy(col("session_id"))
-      .agg(
-        min(col("event_ts")).as("session_start_ts_events"),
-        max(col("event_ts")).as("session_end_ts"),
-        count(col("event_id")).as("total_events"),
-        min(col("event_date")).as("session_date"), // deterministic `first` (`:170`)
-        dsumIf(col("event_type") === "purchase", col("amount_usd")).as("session_revenue"),
-        countIf(col("event_type") === "purchase").as("has_purchased"))
+  def sessionMetrics(eventsClean: DataFrame, sessionsClean: DataFrame): DataFrame =
+    composeSessionMetrics(
+      eventsClean
+        .groupBy(col("session_id"))
+        .agg(
+          min(col("event_ts")).as("session_start_ts_events"),
+          max(col("event_ts")).as("session_end_ts"),
+          count(col("event_id")).as("total_events"),
+          min(col("event_date")).as("session_date"), // deterministic `first` (`:170`)
+          dsumIf(col("event_type") === "purchase", col("amount_usd")).as("session_revenue"),
+          countIf(col("event_type") === "purchase").as("has_purchased")),
+      sessionsClean)
+
+  /** session_metrics' final select list (`:187-209`), shared by the
+    * recompute and [[GoldIvm]]: the attrs left join, the start-ts
+    * coalesce preferring the EVENTS min (`:192-197`), the duration
+    * filter and the 'UNKNOWN' fallbacks (`:190,199-201`). `sessionAgg`
+    * is one row per session with the aggregation's columns (others are
+    * dropped); `sessionsClean` must be unique per session_id.
+    */
+  def composeSessionMetrics(sessionAgg: DataFrame, sessionsClean: DataFrame): DataFrame = {
     val attrs = sessionsClean.select(
       col("session_id"), col("customer_id"),
       col("session_start_ts").as("session_start_ts_sessions"),
       col("device"), col("source"), col("country"))
-    val startTs = coalesce(col("session_start_ts_events"), col("session_start_ts_sessions"))
+    val startTs = sessionStartTs(col("session_start_ts_sessions"))
     // NO broadcast hint: sessions are fact-sized (one row per visit —
     // they grow with traffic, not with the catalog). Forcing a
     // broadcast here OOMs at scale; both sides already shuffle on
     // session_id, so the sort-merge/shuffled-hash join co-locates for
     // free, and AQE still auto-broadcasts when the table is small.
-    agg
+    sessionAgg
       .join(attrs, Seq("session_id"), "left")
       .select(
         col("session_id"),
-        coalesce(col("customer_id"), lit("UNKNOWN")).as("customer_id"),
+        orUnknown(col("customer_id")).as("customer_id"),
         col("session_date"),
         startTs.as("session_start_ts"),
         col("session_end_ts"),
-        (col("session_end_ts").cast(LongType) - startTs.cast(LongType))
-          .as("session_duration_sec"),
+        sessionDurationSec(startTs).as("session_duration_sec"),
         col("total_events"),
-        coalesce(col("device"), lit("UNKNOWN")).as("device"),
-        coalesce(col("source"), lit("UNKNOWN")).as("source"),
-        coalesce(col("country"), lit("UNKNOWN")).as("country"),
+        orUnknown(col("device")).as("device"),
+        orUnknown(col("source")).as("source"),
+        orUnknown(col("country")).as("country"),
         col("session_revenue").cast(DoubleType).as("session_revenue"),
         col("has_purchased").cast(IntegerType).as("has_purchased"))
-      .filter(col("session_duration_sec").isNotNull && col("session_duration_sec") >= 0)
+      .filter(validDuration)
   }
 
-  /** customer_360 (`03_gold_aggregate.py:226-272`): demographics LEFT
-    * JOIN the session_metrics rollup, zero-fill, AOV NULL when no orders,
-    * `asOf` replacing current_date and `loadTs` replacing
-    * current_timestamp (scd_load_ts) for determinism. `total_orders`
-    * sums the per-session purchase counts (`:231`). No customer filter
-    * before the rollup: 'UNKNOWN' groups like any key and drops in the
-    * demographics left join unless a customer carries that id (`:229`).
+  // session_metrics' derived columns (`:190-209`), shared with GoldIvm's
+  // level-2 prepare: the 'UNKNOWN' fallback, the start-ts coalesce that
+  // prefers the events' min over the sessions row, the duration and the
+  // filter keeping known, non-negative durations
+  private[ecom] val Unknown: String = "UNKNOWN"
+  private[ecom] def orUnknown(c: Column): Column = coalesce(c, lit(Unknown))
+  private[ecom] def sessionStartTs(sessionsStart: Column): Column =
+    coalesce(col("session_start_ts_events"), sessionsStart)
+  private[ecom] def sessionDurationSec(startTs: Column): Column =
+    col("session_end_ts").cast(LongType) - startTs.cast(LongType)
+  private[ecom] def validDuration: Column =
+    col("session_duration_sec").isNotNull && col("session_duration_sec") >= 0
+
+  /** customer_360 (`03_gold_aggregate.py:226-272`): the session_metrics
+    * rollup per customer, composed by [[composeCustomer360]].
+    * `total_orders` sums the per-session purchase counts (`:231`). No
+    * customer filter before the rollup: 'UNKNOWN' groups like any key
+    * and drops in the demographics left join unless a customer carries
+    * that id (`:229`).
     */
   def customer360(customersClean: DataFrame, sessionMetrics: DataFrame,
+      asOf: LocalDate, loadTs: Timestamp): DataFrame =
+    composeCustomer360(customersClean,
+      sessionMetrics
+        .groupBy(col("customer_id"))
+        .agg(
+          // decimal partial sum: order-independent money aggregate (a plain
+          // double sum depends on partition order under AQE/parallelism)
+          graft.util.Exact.dsum(col("session_revenue")).as("customer_total_revenue"),
+          sum(col("has_purchased")).cast(LongType).as("total_orders"),
+          countDistinct(col("session_id")).as("total_sessions"),
+          max(col("session_end_ts")).as("last_active_ts"),
+          min(col("session_start_ts")).as("first_active_ts")),
+      asOf, loadTs)
+
+  /** customer_360's final select list (`:240-272`) over the per-customer
+    * rollup, shared by the recompute and [[GoldIvm]]: demographics LEFT
+    * JOIN the rollup, zero-fill, AOV NULL when no orders (`:256-263`,
+    * the exact cents quotient rounded half up), `asOf` replacing
+    * current_date and `loadTs` replacing current_timestamp (scd_load_ts)
+    * for determinism. `sessionAgg` carries `customer_id`,
+    * `customer_total_revenue` (DOUBLE), `total_orders`,
+    * `total_sessions`, `first_active_ts` and `last_active_ts`.
+    */
+  def composeCustomer360(customersClean: DataFrame, sessionAgg: DataFrame,
       asOf: LocalDate, loadTs: Timestamp): DataFrame = {
-    val sessionAgg = sessionMetrics
-      .groupBy(col("customer_id"))
-      .agg(
-        // decimal partial sum: order-independent money aggregate (a plain
-        // double sum depends on partition order under AQE/parallelism)
-        graft.util.Exact.dsum(col("session_revenue")).as("customer_total_revenue"),
-        sum(col("has_purchased")).cast(LongType).as("total_orders"),
-        countDistinct(col("session_id")).as("total_sessions"),
-        max(col("session_end_ts")).as("last_active_ts"),
-        min(col("session_start_ts")).as("first_active_ts"))
     val asOfCol = lit(asOf.toString).cast(DateType)
     customersClean
       .select("customer_id", "name", "email", "country", "age", "signup_date", "marketing_opt_in")

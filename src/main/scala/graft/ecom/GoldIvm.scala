@@ -18,8 +18,11 @@ import graft.ops.IncrementalAgg
   *
   * Decomposition — each gold model splits into its IVM-maintainable
   * aggregate core(s), persisted as versioned tables under
-  * `<warehouseDir>/_mv/`, plus a thin compose-at-read join that mirrors
-  * the reference's final select list exactly:
+  * `<warehouseDir>/_mv/`, plus the compose step that lives in [[Gold]]
+  * (`Gold.composeProductMetrics`, `composeSessionMetrics`,
+  * `composeCustomer360`): the relations here only project the maintained
+  * aggregates into the shape the recompute's aggregation produces and
+  * call it, so the reference's final select list is written once:
   *
   *  - '''product_metrics''' (`03_gold_aggregate.py:38-110`): three
   *    maintained aggregates — event metrics (conditional view/cart
@@ -29,6 +32,8 @@ import graft.ops.IncrementalAgg
   *    composed with the reference's FULL OUTER + dim joins and
   *    zero-fill coalesces. The compose joins aggregate-sized inputs,
   *    never the fact tables.
+  *  - '''session_metrics''' (`:163-211`): the level-1 rollup below already
+  *    has the per-session aggregation's columns.
   *  - '''customer_360''' (`:226-272`): a TWO-LEVEL cascade. Level 1
   *    maintains the per-session rollup of events (min/max timestamps,
   *    purchase counts, exact-decimal revenue) as a CDC-ENABLED
@@ -36,7 +41,8 @@ import graft.ops.IncrementalAgg
   *    `countDistinct(session_id)` becomes a plain row count over the
   *    one-row-per-session level-1 view, and the session attrs join +
   *    duration filter ride the `prepare` hook (delta propagation
-  *    through a static dimension). `first/last_active_ts` are min/max
+  *    through a static dimension), built from [[Gold]]'s start-ts,
+  *    duration and UNKNOWN expressions. `first/last_active_ts` are min/max
   *    under session deletes — exactly [[IncrementalAgg]]'s bounded
   *    dirty-group recompute.
   *
@@ -55,8 +61,8 @@ import graft.ops.IncrementalAgg
   *
   * Numeric discipline: money sums maintain as DECIMAL(18,2) inside the
   * MVs (order-independent, exactly re-playable under any window
-  * split) and cast to DOUBLE only in the compose select, which is the
-  * same value `Exact.dsum` produces in the full-recompute gold.
+  * split) and cast to DOUBLE only on the way into the compose, which
+  * is the same value `Exact.dsum` produces in the full-recompute gold.
   */
 final case class GoldIvm(spark: SparkSession, warehouseDir: String) {
 
@@ -145,10 +151,9 @@ final case class GoldIvm(spark: SparkSession, warehouseDir: String) {
         "rating_cnt" -> when(col("rating").isNotNull, 1L).otherwise(0L)),
       prepare = _.filter(col("product_id").isNotNull)))
 
-  /** The product_metrics gold relation from the maintained aggregates —
-    * the reference's final joins/coalesces (`03_gold_aggregate.py:
-    * 78-108`) over aggregate-sized inputs (the fact tables are never
-    * touched). Column-for-column the [[Gold.productMetrics]] output.
+  /** The product_metrics gold relation: the maintained aggregates in
+    * [[Gold.composeProductMetrics]]'s input shape (the fact tables are
+    * never touched), composed by it.
     */
   def productMetrics(productsClean: DataFrame): DataFrame = {
     val em = eventMetricsMv.read().select(
@@ -160,27 +165,16 @@ final case class GoldIvm(spark: SparkSession, warehouseDir: String) {
     val rm = reviewMetricsMv.read().select(
       col("product_id"),
       // AVG rewrite: exact sum over non-null count (null when none —
-      // the zero-fill below then applies, as it does to avg() itself)
+      // the compose's zero-fill then applies, as it does to avg() itself)
       when(col("rating_cnt") > 0L,
         col("rating_sum").cast(DoubleType) / col("rating_cnt")).as("avg_rating"),
       col("review_count"))
-    val productAttrs = productsClean.select("product_id", "category", "product_name")
-    em.join(om, Seq("date_key", "product_id"), "full_outer")
-      .select(
+    Gold.composeProductMetrics(
+      em.join(om, Seq("date_key", "product_id"), "full_outer").select(
         coalesce(col("_ed_e"), col("_ed_o")).as("event_date"), col("product_id"),
-        coalesce(col("view_count"), lit(0L)).cast(IntegerType).as("view_count"),
-        coalesce(col("cart_count"), lit(0L)).cast(IntegerType).as("cart_count"),
-        coalesce(col("purchase_count"), lit(0L)).cast(IntegerType).as("purchase_count"),
-        coalesce(col("total_revenue").cast(DoubleType), lit(0.0))
-          .cast(DoubleType).as("total_revenue"))
-      .join(broadcast(productAttrs), Seq("product_id"), "left")
-      .join(broadcast(rm), Seq("product_id"), "left")
-      .select(
-        col("event_date"), col("product_id"), col("product_name"), col("category"),
-        col("view_count"), col("cart_count"), col("purchase_count"), col("total_revenue"),
-        round(coalesce(col("avg_rating"), lit(0.0)), 2).as("avg_rating"),
-        coalesce(col("review_count"), lit(0L)).cast(IntegerType).as("review_count"))
-      .filter(col("product_id").isNotNull)
+        col("view_count"), col("cart_count"), col("purchase_count"),
+        col("total_revenue").cast(DoubleType).as("total_revenue")),
+      productsClean, rm)
   }
 
   // ---- customer_360 (two-level) -----------------------------------------
@@ -200,18 +194,6 @@ final case class GoldIvm(spark: SparkSession, warehouseDir: String) {
     val netKeys: Seq[String] = Seq("session_key")
   }
 
-  /** CDF on the level-1 rollup, set whenever absent (and the table has
-    * its bootstrap commit to attach the property to) — never assume a
-    * prior call's property commit survived.
-    */
-  private def ensureRollupCdc(): Unit =
-    if (sessionRollupMv.currentVersion().isDefined &&
-        !sessionRollupMv.tableProperties()
-          .get(VersionedTable.CdcEnabledProp).contains("true")) {
-      sessionRollupMv.setTableProperty(VersionedTable.CdcEnabledProp, "true")
-      ()
-    }
-
   /** The session-attrs dimension in level-2's prepare shape. */
   private def attrsFor(sessionsClean: DataFrame): DataFrame =
     sessionsClean.select(
@@ -220,18 +202,17 @@ final case class GoldIvm(spark: SparkSession, warehouseDir: String) {
 
   /** Level-2 prepare: the reference's attrs join + start-ts coalesce +
     * duration filter + UNKNOWN fallback (`03_gold_aggregate.py:
-    * 187-209`), applied uniformly to level-1 change rows and recompute
-    * scans — the delta-through-static-dimension rule.
+    * 187-209`, the expressions [[Gold.composeSessionMetrics]] uses),
+    * applied uniformly to level-1 change rows and recompute scans — the
+    * delta-through-static-dimension rule.
     */
   private def sessionToCustomer(attrs: DataFrame)(df: DataFrame): DataFrame = {
-    val start = coalesce(col("session_start_ts_events"), col("_attr_start_ts"))
+    val start = Gold.sessionStartTs(col("_attr_start_ts"))
     df.join(attrs, Seq("session_id"), "left")
       .withColumn("session_start_ts", start)
-      .withColumn("session_duration_sec",
-        col("session_end_ts").cast(LongType) - start.cast(LongType))
-      .filter(col("session_duration_sec").isNotNull &&
-        col("session_duration_sec") >= 0)
-      .withColumn("customer_id", coalesce(col("_attr_customer_id"), lit("UNKNOWN")))
+      .withColumn("session_duration_sec", Gold.sessionDurationSec(start))
+      .filter(Gold.validDuration)
+      .withColumn("customer_id", Gold.orUnknown(col("_attr_customer_id")))
   }
 
   /** One incremental pass for the customer_360 cascade: level 1
@@ -246,7 +227,7 @@ final case class GoldIvm(spark: SparkSession, warehouseDir: String) {
     // commit feed-less and every future level-2 refresh of that window
     // would refuse (recoverable only by re-bootstrap). Idempotent —
     // one manifest read per refresh, a metadata commit only when absent.
-    if (!bootstrap) ensureRollupCdc()
+    if (!bootstrap) sessionRollupMv.ensureChangeFeed()
     // level 1: the session rollup of `Gold.sessionMetrics`'s agg
     // (`03_gold_aggregate.py:163-176`) — session_id recovered from the
     // sentinel key via the constant-per-group min()
@@ -265,7 +246,7 @@ final case class GoldIvm(spark: SparkSession, warehouseDir: String) {
       netKeys = Seq("event_id"))
     // level 2 consumes level 1's feed: enable CDF right after the
     // bootstrap append so every DML version it ever takes is recorded
-    if (bootstrap) ensureRollupCdc()
+    if (bootstrap) sessionRollupMv.ensureChangeFeed()
     val prep = sessionToCustomer(attrsFor(sessionsClean)) _
     val l2 = IncrementalAgg.refresh(customerRollupMv, sessionRollupMv,
       keys = L2.keys, countCol = L2.countCol, sums = L2.sums,
@@ -371,7 +352,7 @@ final case class GoldIvm(spark: SparkSession, warehouseDir: String) {
       meta.sizes.valuesIterator.map(_._1).sum < minBytes
     if (small) return full(level1At)
     val unknownDirty = dirty
-      .filter(col("customer_id").isNull || col("customer_id") === "UNKNOWN")
+      .filter(col("customer_id").isNull || col("customer_id") === Gold.Unknown)
       .limit(1).count() > 0
     if (unknownDirty) full(level1At)
     else {
@@ -386,74 +367,27 @@ final case class GoldIvm(spark: SparkSession, warehouseDir: String) {
     }
   }
 
-  /** The session_metrics gold relation from the maintained level-1
-    * rollup — column-for-column [[Gold.sessionMetrics]]'s output
-    * (`03_gold_aggregate.py:163-209`), with the per-session aggregation
-    * replaced by the maintained table. `sessionsAttrs` must be unique
+  /** The session_metrics gold relation: [[Gold.composeSessionMetrics]]
+    * over the maintained level-1 rollup, which already carries the
+    * per-session aggregation's columns. `sessionsAttrs` must be unique
     * per session_id (the [[IncrementalLakehouse]] maintains exactly
     * that table).
     */
-  def sessionMetrics(sessionsAttrs: DataFrame): DataFrame = {
-    val r = sessionRollupMv.read()
-    val attrs = sessionsAttrs.select(
-      col("session_id"), col("customer_id"),
-      col("session_start_ts").as("session_start_ts_sessions"),
-      col("device"), col("source"), col("country"))
-    val startTs =
-      coalesce(col("session_start_ts_events"), col("session_start_ts_sessions"))
-    // no broadcast hint, as Gold.sessionMetrics: sessions are fact-sized
-    r.join(attrs, Seq("session_id"), "left")
-      .select(
-        col("session_id"),
-        coalesce(col("customer_id"), lit("UNKNOWN")).as("customer_id"),
-        col("session_date"),
-        startTs.as("session_start_ts"),
-        col("session_end_ts"),
-        (col("session_end_ts").cast(LongType) - startTs.cast(LongType))
-          .as("session_duration_sec"),
-        col("total_events"),
-        coalesce(col("device"), lit("UNKNOWN")).as("device"),
-        coalesce(col("source"), lit("UNKNOWN")).as("source"),
-        coalesce(col("country"), lit("UNKNOWN")).as("country"),
-        col("session_revenue").cast(DoubleType).as("session_revenue"),
-        col("has_purchased").cast(IntegerType).as("has_purchased"))
-      .filter(col("session_duration_sec").isNotNull &&
-        col("session_duration_sec") >= 0)
-  }
+  def sessionMetrics(sessionsAttrs: DataFrame): DataFrame =
+    Gold.composeSessionMetrics(sessionRollupMv.read(), sessionsAttrs)
 
-  /** The customer_360 gold relation from the maintained level-2 rollup:
-    * the reference's demographics left join, zero-fills, NULL-safe AOV,
-    * as-of datediff and scd load stamp (`03_gold_aggregate.py:240-272`)
-    * — column-for-column the [[Gold.customer360]] output, with the
-    * session-metrics aggregation replaced by the maintained table.
+  /** The customer_360 gold relation: the maintained level-2 rollup in
+    * [[Gold.composeCustomer360]]'s input shape, composed by it.
     */
   def customer360(customersClean: DataFrame, asOf: LocalDate,
-      loadTs: Timestamp): DataFrame = {
-    val rollup = customerRollupMv.read().select(
-      col("customer_id"),
-      col("customer_total_revenue").cast(DoubleType).as("customer_total_revenue"),
-      col("total_orders"), col("total_sessions"),
-      col("first_active_ts"), col("last_active_ts"))
-    val asOfCol = lit(asOf.toString).cast(DateType)
-    customersClean
-      .select("customer_id", "name", "email", "country", "age", "signup_date",
-        "marketing_opt_in")
-      .join(rollup, Seq("customer_id"), "left")
-      .select(
-        col("customer_id"), col("name"), col("email"), col("country"), col("age"),
-        col("signup_date"), col("marketing_opt_in"),
-        coalesce(col("customer_total_revenue"), lit(0.0)).as("customer_total_revenue"),
-        coalesce(col("total_orders"), lit(0L)).cast(IntegerType).as("total_orders"),
-        coalesce(col("total_sessions"), lit(0L)).cast(IntegerType).as("total_sessions"),
-        col("first_active_ts"), col("last_active_ts"))
-      .withColumn("average_order_value",
-        when(col("total_orders") =!= 0,
-          graft.util.Exact.centsQuotient(col("customer_total_revenue"), col("total_orders")))
-          .otherwise(lit(null).cast(DoubleType)))
-      .withColumn("days_since_signup", datediff(asOfCol, col("signup_date")))
-      .withColumn("scd_load_ts", lit(loadTs))
-      .filter(col("customer_id").isNotNull)
-  }
+      loadTs: Timestamp): DataFrame =
+    Gold.composeCustomer360(customersClean,
+      customerRollupMv.read().select(
+        col("customer_id"),
+        col("customer_total_revenue").cast(DoubleType).as("customer_total_revenue"),
+        col("total_orders"), col("total_sessions"),
+        col("first_active_ts"), col("last_active_ts")),
+      asOf, loadTs)
 }
 
 object GoldIvm {

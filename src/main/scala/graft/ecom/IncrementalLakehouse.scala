@@ -23,9 +23,11 @@ import graft.ecom.VersionedTable.{MergeInsert, MergeUpdate, MergeWhen}
   *    neither PK-filters nor dedups them.
   *  - '''silver → gold''': [[GoldIvm]] refreshes the maintained
   *    aggregates from the silvers' change feeds (product_metrics' three
-  *    aggregates concurrently; customer_360's two-level cascade);
-  *    product/customer dimensions join at compose-time, so dim changes
-  *    flow with zero maintenance work.
+  *    aggregates concurrently; customer_360's two-level cascade) and
+  *    composes the gold relations with [[Gold]]'s own compose steps, the
+  *    batch medallion's final select lists; product/customer dimensions
+  *    join at compose-time, so dim changes flow with zero maintenance
+  *    work.
   *
   * Cross-table dependencies a full recompute refreshes for free are
   * handled explicitly — the two honest costs of incrementality:
@@ -84,22 +86,22 @@ final case class IncrementalLakehouse(spark: SparkSession, warehouseDir: String)
   val sessionsClean: VersionedTable = vt("sessions_clean")
   /** Unique-per-session attrs (latest-wins over the sessions stream) —
     * level-2's `prepare` dimension plus the guard's change detector.
+    * Maintained from THIS WAVE's session rows only — O(wave), never
+    * O(stream): the table stores `_ingest_ts` alongside the attrs, so
+    * the latest-wins comparison against the stored audit reproduces the
+    * full-stream argmax under any wave split and any out-of-order
+    * re-delivery (a newer re-delivery with unchanged values still
+    * advances the stored audit, keeping a later-but-older delivery from
+    * winning wrongly). Rows with a null session_id never land. Its own
+    * change feed drives [[reattribute]]'s bounded repair when a wave
+    * changes (or late-delivers) attrs of a session already aggregated
+    * into customer_360's rollup.
     */
   val sessionAttrs: VersionedTable = vt("_session_attrs")
 
   val gold: GoldIvm = GoldIvm(spark, warehouseDir)
 
   private def app(t: VersionedTable): String = s"inc:${t.tableDir}"
-
-  /** CDC on, immediately after a table's first data commit (so every
-    * DML version the gold refresh will ever read is recorded); no-op
-    * when already enabled.
-    */
-  private def ensureCdc(t: VersionedTable): Unit =
-    if (!t.tableProperties().get(VersionedTable.CdcEnabledProp).contains("true")) {
-      t.setTableProperty(VersionedTable.CdcEnabledProp, "true")
-      ()
-    }
 
   /** Auto-compaction on, once per silver table: the wave cadence
     * accretes one small file set per table per wave, and the property
@@ -129,22 +131,35 @@ final case class IncrementalLakehouse(spark: SparkSession, warehouseDir: String)
       case _ => false
     }
 
-  /** Latest-wins merge of one cleaned wave into a silver table: strict
+  /** Latest-wins merge of one cleaned wave into a silver table (every
+    * silver but the append-only sessions, plus the attrs table): strict
     * `(_ingest_ts, tie)` descending — exactly [[Silver]]'s dedup order.
     * The wave is in-batch-reduced first (merge sources are key-unique);
     * an empty wave commits nothing. `extraMatched` prepends clauses
     * (the items repair). Exactly-once per (`inc:<table>`, waveId).
+    *
+    * Table set-up rides the same path: auto-compaction, and with `cdc`
+    * the change feed the gold refresh and the repairs read, are enabled
+    * right after the bootstrap append and re-checked before every later
+    * merge — the heal for a crash between a bootstrap and its property
+    * commits, so no DML version ever lands unrecorded.
     */
   private def mergeLatestWins(dst: VersionedTable, wave: DataFrame,
-      keys: Seq[String], tie: String, waveId: Long,
+      keys: Seq[String], tie: String, waveId: Long, cdc: Boolean,
       extraMatched: Seq[MergeWhen] = Seq.empty): Option[Long] = {
+    def enable(): Unit = {
+      if (cdc) dst.ensureChangeFeed()
+      ensureAutoCompact(dst)
+    }
+    val bootstrap = dst.currentVersion().isEmpty
+    if (!bootstrap) enable()
     if (dst.currentBatchId(app(dst)).exists(_ >= waveId)) return None
     // an optimizer-provably-empty wave lands nothing (same contract as
     // the counted n == 0 branch below) — zero jobs instead of one
     // materialization job per table per storm wave. Bootstrap is
     // excluded: an empty FIRST wave still commits the schema-bearing
     // v1 through the branch below, exactly as before.
-    if (dst.currentVersion().isDefined && planEmpty(wave)) return None
+    if (!bootstrap && planEmpty(wave)) return None
     val reduced0 = graft.streaming.Sinks.latestWins(wave, keys,
       struct(col("_ingest_ts"), col(tie)))
     // the repair/marker columns steer clauses only — never stored
@@ -153,9 +168,12 @@ final case class IncrementalLakehouse(spark: SparkSession, warehouseDir: String)
     // bootstrap writes straight from the lineage — one pass, no cache
     // (the bootstrap wave is the BIG one; caching it would trade the
     // table's largest write for memory pressure)
-    if (dst.currentVersion().isEmpty)
-      return dst.commitAppendBatch(
+    if (bootstrap) {
+      val v = dst.commitAppendBatch(
         reduced0.select(stored.map(col): _*), waveId, app(dst))
+      enable()
+      return v
+    }
     // additive feed drift: a wave column the table predates evolves the
     // silver schema FIRST (one empty additive append — the ALTER ADD
     // COLUMN path; a replayed step skips it, the column exists by then).
@@ -249,14 +267,10 @@ final case class IncrementalLakehouse(spark: SparkSession, warehouseDir: String)
     // wave's items derive their date fallback from the post-merge
     // orders table, and the repair covers earlier waves' items whose
     // order changed in THIS wave). Each feed table's CDC enablement
-    // follows its own first commit, inside its own branch.
-    val fEvents = Future {
-      mergeLatestWins(eventsClean,
-        Silver.eventsProjected(bronze("events")),
-        Seq("event_id"), "event_ts", waveId)
-      ensureCdc(eventsClean)
-      ensureAutoCompact(eventsClean)
-    }
+    // follows its own first commit, inside its own merge.
+    val fEvents = Future(mergeLatestWins(eventsClean,
+      Silver.eventsProjected(bronze("events")),
+      Seq("event_id"), "event_ts", waveId, cdc = true))
     // the items' clean/dedup half runs CONCURRENTLY with the orders
     // merge — only the date-fallback join needs the post-merge orders
     val fItemsClean = Future {
@@ -264,12 +278,9 @@ final case class IncrementalLakehouse(spark: SparkSession, warehouseDir: String)
       d.count()
       d
     }
-    val fOrders = Future {
-      mergeLatestWins(ordersClean, Silver.orders(bronze("orders")),
-        Seq("order_id"), "order_ts", waveId)
-      ensureCdc(ordersClean) // before any wave-2 DML lands on it
-      ensureAutoCompact(ordersClean)
-    }
+    val fOrders = Future(mergeLatestWins(ordersClean,
+      Silver.orders(bronze("orders")),
+      Seq("order_id"), "order_ts", waveId, cdc = true))
     val fItems = (for { d <- fItemsClean; _ <- fOrders } yield d).map { d =>
       try {
         // the date-fallback join needs ONLY the orders this wave's
@@ -295,26 +306,17 @@ final case class IncrementalLakehouse(spark: SparkSession, warehouseDir: String)
           .withColumn(ItemPkCol, coalesce(col("product_id"), lit(NullPk)))
           .withColumn(RepairCol, lit(false))
         mergeItemsWithRepair(itemsWave, waveId)
-        ensureCdc(orderItemsClean)
-        ensureAutoCompact(orderItemsClean)
       } finally d.unpersist(blocking = false): Unit
     }
-    val fReviews = Future {
-      mergeLatestWins(reviewsClean, Silver.reviews(bronze("reviews")),
-        Seq("review_id"), "review_ts", waveId)
-      ensureCdc(reviewsClean)
-      ensureAutoCompact(reviewsClean)
-    }
-    val fCustomers = Future {
-      mergeLatestWins(customersClean, Silver.customers(bronze("customers")),
-        Seq("customer_id"), "email", waveId)
-      ensureAutoCompact(customersClean)
-    }
-    val fProducts = Future {
-      mergeLatestWins(productsClean, Silver.products(bronze("products")),
-        Seq("product_id"), "product_name", waveId)
-      ensureAutoCompact(productsClean)
-    }
+    val fReviews = Future(mergeLatestWins(reviewsClean,
+      Silver.reviews(bronze("reviews")),
+      Seq("review_id"), "review_ts", waveId, cdc = true))
+    val fCustomers = Future(mergeLatestWins(customersClean,
+      Silver.customers(bronze("customers")),
+      Seq("customer_id"), "email", waveId, cdc = false))
+    val fProducts = Future(mergeLatestWins(productsClean,
+      Silver.products(bronze("products")),
+      Seq("product_id"), "product_name", waveId, cdc = false))
     // one shared materialization of the cleaned sessions wave — the
     // append branch AND the attrs chain both read it
     val sessionsWave = Silver.sessions(bronze("sessions")).persist()
@@ -340,8 +342,10 @@ final case class IncrementalLakehouse(spark: SparkSession, warehouseDir: String)
     // sessions+attrs).
     val fAttrs = fSessions.map { _ =>
       ensureReattrCursor()
-      maintainSessionAttrs(waveId, sessionsWave)
-      ensureAutoCompact(sessionAttrs)
+      mergeLatestWins(sessionAttrs,
+        sessionsWave.filter(col("session_id").isNotNull)
+          .select(AttrCols.map(col): _*),
+        Seq("session_id"), "session_start_ts", waveId, cdc = true)
       reattribute()
     }
     // gold: the maintained aggregates advance over the silvers'
@@ -368,8 +372,8 @@ final case class IncrementalLakehouse(spark: SparkSession, warehouseDir: String)
       sessionsWave.unpersist(blocking = false)
       bootstrapPool.foreach(_.shutdown())
     }
-    // a gold bootstrap this wave consumed the attrs head maintainSession-
-    // Attrs left — pin it as the re-attribution cursor before returning
+    // a gold bootstrap this wave consumed the attrs head the attrs merge
+    // left — pin it as the re-attribution cursor before returning
     ensureReattrCursor()
 
     if (refreshGold) goldRelations(asOf, loadTs) else Map.empty
@@ -749,8 +753,8 @@ final case class IncrementalLakehouse(spark: SparkSession, warehouseDir: String)
 
   private val ReattrApp: String = s"reattr:${sessionAttrs.tableDir}"
 
-  /** The four gold relations, composed at read over the maintained
-    * aggregates — column-for-column [[Gold]]'s outputs.
+  /** The four gold relations: [[Gold]]'s compose steps at read over
+    * the maintained aggregates, so column-for-column [[Gold]]'s outputs.
     */
   def goldRelations(asOf: LocalDate, loadTs: Timestamp): Map[String, DataFrame] = {
     val pm = gold.productMetrics(productsClean.read())
@@ -774,7 +778,7 @@ final case class IncrementalLakehouse(spark: SparkSession, warehouseDir: String)
     repairRows(itemsWave, waveId) match {
       case None =>
         mergeLatestWins(orderItemsClean, itemsWave,
-          Seq("order_id", ItemPkCol), "line_total_usd", waveId): Unit
+          Seq("order_id", ItemPkCol), "line_total_usd", waveId, cdc = true): Unit
       case Some(rows) => // fold the repair rows into the wave merge
         val s = (c: String) => col("s").getField(c)
         val t = (c: String) => col("t").getField(c)
@@ -783,7 +787,7 @@ final case class IncrementalLakehouse(spark: SparkSession, warehouseDir: String)
             lit(null).cast(rows.schema(RepairDateCol).dataType))
           .unionByName(rows)
         mergeLatestWins(orderItemsClean, unified,
-          Seq("order_id", ItemPkCol), "line_total_usd", waveId,
+          Seq("order_id", ItemPkCol), "line_total_usd", waveId, cdc = true,
           extraMatched = Seq(MergeWhen(
             Some(s(RepairCol) && !(desired <=> t("order_date"))),
             MergeUpdate(Map("order_date" -> desired))))): Unit
@@ -827,66 +831,6 @@ final case class IncrementalLakehouse(spark: SparkSession, warehouseDir: String)
     Some(existing)
   }
 
-  /** Maintain the unique-per-session attrs table from THIS WAVE's
-    * session rows only — O(wave), never O(stream): the table stores
-    * `_ingest_ts` alongside the attrs, so the latest-wins comparison
-    * against the stored audit reproduces the full-stream argmax under
-    * any wave split and any out-of-order re-delivery (a newer
-    * re-delivery with unchanged values still advances the stored
-    * audit, keeping a later-but-older delivery from winning wrongly).
-    *
-    * The table is CDF-enabled: its own change feed is what drives
-    * [[reattribute]]'s bounded repair when a wave changes (or
-    * late-delivers) attrs of a session already aggregated into
-    * customer_360's rollup — the event that used to REFUSE with
-    * [[rebootstrapGold]].
-    */
-  private def maintainSessionAttrs(waveId: Long, waveSessions: DataFrame): Unit = {
-    val a = app(sessionAttrs)
-    if (sessionAttrs.currentBatchId(a).exists(_ >= waveId)) return
-    // plan-provably-empty wave: nothing to land (the counted n == 0
-    // branch's contract), zero jobs — bootstrap excluded as in
-    // mergeLatestWins
-    if (sessionAttrs.currentVersion().isDefined && planEmpty(waveSessions)) return
-    val attrCols = Seq("customer_id", "session_start_ts", "device",
-      "source", "country")
-    val reduced0 = graft.streaming.Sinks.latestWins(
-      waveSessions.filter(col("session_id").isNotNull)
-        .select((("session_id" +: attrCols) :+ "_ingest_ts").map(col): _*),
-      Seq("session_id"), struct(col("_ingest_ts"), col("session_start_ts")))
-    // bootstrap writes straight from the lineage — ONE consumer (the
-    // append), and the bootstrap wave is this table's biggest; the
-    // persist + count below exist for the merge's multi-pass reads only
-    if (sessionAttrs.currentVersion().isEmpty) {
-      sessionAttrs.commitAppendBatch(reduced0, waveId, a)
-      ensureCdc(sessionAttrs) // before any post-bootstrap merge lands
-      return // bootstrap wave: gold rollup cannot predate the attrs
-    }
-    val reduced = reduced0.persist()
-    try {
-      val n = reduced.count()
-      // an attrs-empty wave lands NOTHING (replay-safe: no marker, no
-      // version) — the attrs head stays put and the re-attribution
-      // detector short-circuits on its version compare, so a wave that
-      // delivers no session rows pays zero attrs-maintenance cost
-      if (n == 0L) return
-      ensureCdc(sessionAttrs) // heal a crash between bootstrap and enable
-      val s = (c: String) => col("s").getField(c)
-      val t = (c: String) => col("t").getField(c)
-      val newer = struct(s("_ingest_ts"), s("session_start_ts")) >
-        struct(t("_ingest_ts"), t("session_start_ts"))
-      val allCols = ("session_id" +: attrCols) :+ "_ingest_ts"
-      try sessionAttrs.mergeClauses(reduced, Seq("session_id"),
-        matched = Seq(MergeWhen(Some(newer),
-          MergeUpdate((attrCols :+ "_ingest_ts").map(c => c -> s(c)).toMap))),
-        notMatched = Seq(MergeWhen(None,
-          MergeInsert(allCols.map(c => c -> s(c)).toMap))),
-        txn = Some((a, waveId)), sourceKeyUnique = true,
-        sourceRowsHint = Some(n)): Unit
-      catch { case _: VersionedTable.ReplayLandedException => () }
-    } finally reduced.unpersist(blocking = false): Unit
-  }
-
   /** Drop and re-bootstrap the gold aggregates. No longer REQUIRED for
     * attrs changes ([[reattribute]] handles those in O(changed rows));
     * still the escape hatch for anything outside the maintained
@@ -919,6 +863,11 @@ object IncrementalLakehouse {
   val RepairCol: String = "_graft_repair"
   /** The repaired order's current order_date (null → ingest fallback). */
   val RepairDateCol: String = "_graft_repair_date"
+  /** The `_session_attrs` columns: the key, the attributes level 2 and
+    * session_metrics join, and the audit stamp latest-wins compares.
+    */
+  private val AttrCols: Seq[String] = Seq("session_id", "customer_id",
+    "session_start_ts", "device", "source", "country", "_ingest_ts")
   /** Wave stamp on the streamed medallion's bronze landing tables. */
   val WaveCol: String = "_graft_wave"
   /** Quarantine column naming NON-ADDITIVE schema drift ([[autoLand]]):

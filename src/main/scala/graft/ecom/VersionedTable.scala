@@ -1218,6 +1218,18 @@ final case class VersionedTable(
   def setTableProperty(key: String, value: String): Long =
     setTableProperties(Map(key -> value))
 
+  /** Change feed on ([[VersionedTable.CdcEnabledProp]]), wherever found
+    * absent on a table that has a commit to attach it to; a manifest
+    * read when already on. Idempotent, so a caller re-runs it as the
+    * crash heal rather than trusting that an earlier property commit
+    * landed.
+    */
+  def ensureChangeFeed(): Unit =
+    currentVersion().foreach { v =>
+      if (!readManifest(v).props.get(VersionedTable.CdcEnabledProp).contains("true"))
+        setTableProperty(VersionedTable.CdcEnabledProp, "true"): Unit
+    }
+
   /** SET TBLPROPERTIES for several keys in ONE metadata commit — the
     * atomic multi-key form: a definition stored as related keys (the
     * materialized-view spec) must never be readable half-written, and

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
 
 /** Dense-vector primitives over `array<float>` embedding columns, built
   * from Spark's higher-order functions (zip_with / aggregate) so they run

@@ -154,9 +154,9 @@ final case class MvSpec(source: String, keys: Seq[String], countCol: String,
       // existing source (heals a crash between a past bootstrap and the
       // property commit), immediately post-bootstrap otherwise
       val srcBootstrap = fact.currentVersion().isEmpty
-      if (!srcBootstrap) MvSpec.ensureCdc(fact)
+      if (!srcBootstrap) fact.ensureChangeFeed()
       srcSpec.refreshChain(spark, fact, visited + source)
-      if (srcBootstrap) MvSpec.ensureCdc(fact)
+      if (srcBootstrap) fact.ensureChangeFeed()
     }
     // refuse an uncommitted dimension HERE, naming it — otherwise the
     // first read of it deep inside the bootstrap throws a bare "has no
@@ -428,17 +428,6 @@ object MvSpec {
     */
   def store(view: VersionedTable, spec: MvSpec): Long =
     view.setTableProperties(spec.props)
-
-  /** Change-feed property on, wherever found absent (and the table has
-    * a commit to attach it to) — never assume a prior call's property
-    * commit survived a crash.
-    */
-  private[ops] def ensureCdc(t: VersionedTable): Unit =
-    if (t.currentVersion().isDefined &&
-        !t.tableProperties().get(VersionedTable.CdcEnabledProp).contains("true")) {
-      t.setTableProperty(VersionedTable.CdcEnabledProp, "true")
-      ()
-    }
 
   /** The whole CREATE path, shared by `CALL graft.system.create_mv` and
     * the `CREATE MATERIALIZED VIEW` DDL: an identical stored definition

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.MediaOps
-import graft.util.Tables.{load, loadSpread}
+import graft.util.Tables.load
 
 /** Multimodal-column queries over documents-derived media payloads
   * (binary column + typed metadata; see graft.multimodal.MediaOps for

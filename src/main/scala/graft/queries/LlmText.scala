@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.util.Tables.{load, loadSpread}
+import graft.util.Tables.load
 import graft.functions.TextFns._
 
 /** Text-analysis operators over the `documents` table: language ID,

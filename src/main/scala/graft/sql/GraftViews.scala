@@ -2,7 +2,6 @@ package graft.sql
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.connector.catalog.Identifier
 
 /** Durable SQL VIEW storage for graft catalogs — the thin declarative
   * layer the reference's gold compose needs on top of materialized

@@ -1,7 +1,5 @@
 package graft.ecom
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -17,7 +15,7 @@ import graft.SparkSuite
 class AutoCompactSpec extends SparkSuite {
   import spark.implicits._
 
-  private def fresh(): String = Files.createTempDirectory("graft-autocompact").toString
+  private def fresh(): String = tempDir("graft-autocompact")
 
   test("small-wave appends stay at bounded file counts; default off; feed unaffected") {
     val dir = fresh()

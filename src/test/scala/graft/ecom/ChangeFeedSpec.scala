@@ -1,7 +1,5 @@
 package graft.ecom
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, concat, lit}
 
@@ -25,7 +23,7 @@ class ChangeFeedSpec extends SparkSuite {
   import spark.implicits._
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-cdf").toString
+    tempDir("graft-cdf")
 
   private val CT = VersionedTable.CdcTypeCol
   private val CV = VersionedTable.CdcVersionCol

@@ -1,7 +1,5 @@
 package graft.ecom
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -19,7 +17,7 @@ class CloneSpec extends SparkSuite {
   import spark.implicits._
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-clone").toString
+    tempDir("graft-clone")
 
   private def rows(vt: VersionedTable): Set[String] =
     vt.read().collect().map(_.mkString("|")).toSet

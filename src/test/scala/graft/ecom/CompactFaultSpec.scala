@@ -1,7 +1,5 @@
 package graft.ecom
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
 
 import graft.SparkSuite
@@ -33,7 +31,7 @@ class CompactFaultSpec extends SparkSuite {
   test("failed swap rename throws and leaves the table recoverable at .bak") {
     spark.sparkContext.hadoopConfiguration
       .setClass("fs.faultyswap.impl", classOf[FaultySwapFs], classOf[FileSystem])
-    val local = Files.createTempDirectory("graft-compact-fault").toString
+    val local = tempDir("graft-compact-fault")
     val lh = Lakehouse(spark, s"faultyswap:$local")
 
     val rows = (1L to 100L).map(i => (i, s"v$i")).toDF("id", "v")

@@ -1,7 +1,5 @@
 package graft.ecom
 
-import java.nio.file.Files
-
 import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
@@ -20,7 +18,7 @@ class ConcurrentAppendSpec extends SparkSuite {
 
   test("racing appenders: every commit lands, versions are dense, no rows lost") {
     val vt = VersionedTable(spark,
-      Files.createTempDirectory("graft-vtconc").toString)
+      tempDir("graft-vtconc"))
     val threads = 3
     val perThread = 4
     // thread t appends batches of ids [t*1000 + k*100, +10)

@@ -2,8 +2,6 @@ package graft.ecom
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSuite
 
 /** The four reference BI queries (analysis/dashboard_queries SQL) run

@@ -1,6 +1,5 @@
 package graft.ecom
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import java.time.LocalDate
 
@@ -85,7 +84,7 @@ object EcomFixtures {
     */
   def gold(spark: SparkSession): Map[String, DataFrame] = synchronized {
     if (cachedGold == null) {
-      val dir = Files.createTempDirectory("graft-lakehouse").toString
+      val dir = graft.SparkSuite.tempDir("graft-lakehouse")
       cachedGold = Lakehouse(spark, dir).runAll(bronze(spark), asOf)
     }
     cachedGold

@@ -1,8 +1,6 @@
 package graft.ecom
 
-import java.nio.file.Files
 import java.sql.Timestamp
-import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -145,7 +143,7 @@ class EcomPipelineSpec extends SparkSuite {
       Seq("16", "102", "2025-01-06 09:00:00", "purchase", "7", "1", "1", "card", "0", "20.0")
     ), t3)
     val baseRaw = EcomFixtures.bronze(spark)("events")
-    val dir = java.nio.file.Files.createTempDirectory("graft-incr").toString
+    val dir = tempDir("graft-incr")
     val lh = Lakehouse(spark, dir)
     // incremental: land day 1, then MERGE day 2's silver delta
     lh.write("events_clean", Silver.events(baseRaw))

@@ -1,7 +1,5 @@
 package graft.ecom
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSuite
@@ -17,7 +15,7 @@ class FormatAdapterSpec extends SparkSuite {
   import spark.implicits._
 
   test("ORC adapter: write/read, partition pruning, dynamic overwrite, compact") {
-    val dir = Files.createTempDirectory("graft-fmt-orc").toString
+    val dir = tempDir("graft-fmt-orc")
     val lh = Lakehouse(spark, dir, format = "orc")
     assert(lh.adapter == FormatAdapter.Orc)
 
@@ -57,7 +55,7 @@ class FormatAdapterSpec extends SparkSuite {
 
     // a transaction-owning format must not be double-logged
     val lh = Lakehouse(spark,
-      Files.createTempDirectory("graft-fmt-delta").toString, format = "delta")
+      tempDir("graft-fmt-delta"), format = "delta")
     val ex = intercept[IllegalArgumentException] { lh.versioned("events_clean") }
     assert(ex.getMessage.contains("own"), ex.getMessage)
 

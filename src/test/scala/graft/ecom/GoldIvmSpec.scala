@@ -1,6 +1,5 @@
 package graft.ecom
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Row}
@@ -84,7 +83,7 @@ class GoldIvmSpec extends SparkSuite {
   private def asSet(df: DataFrame): Set[Row] = df.collect().toSet
 
   test("product_metrics: maintained == Gold recompute through nulls and a storm") {
-    val wh = Files.createTempDirectory("graft-givm").toString
+    val wh = tempDir("graft-givm")
     def vt(name: String, df: DataFrame): VersionedTable = {
       val t = VersionedTable(spark, s"$wh/$name")
       t.commitOverwrite(df)
@@ -120,7 +119,7 @@ class GoldIvmSpec extends SparkSuite {
   }
 
   test("customer_360: two-level cascade == Gold recompute through nulls and a storm") {
-    val wh = Files.createTempDirectory("graft-givm").toString
+    val wh = tempDir("graft-givm")
     val events = VersionedTable(spark, s"$wh/events")
     events.commitOverwrite(baseEvents)
     events.setTableProperty(VersionedTable.CdcEnabledProp, "true")

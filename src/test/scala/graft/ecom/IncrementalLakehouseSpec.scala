@@ -1,10 +1,9 @@
 package graft.ecom
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, StringType}
 
@@ -25,7 +24,7 @@ class IncrementalLakehouseSpec extends SparkSuite {
   private val LoadTs = Timestamp.valueOf("2025-01-01 00:00:00")
 
   private def fresh(): String =
-    Files.createTempDirectory("graft-inc-lh").toString
+    tempDir("graft-inc-lh")
 
   /** Toy raw stream (Medallion adapter shape): users 1-6, two waves by
     * date; user 6 appears only in wave 2.
@@ -282,6 +281,36 @@ class IncrementalLakehouseSpec extends SparkSuite {
         s"(rollup went $rollupBefore -> $landed)")
   }
 
+  test("an older attrs re-delivery and a null-session attrs row leave _session_attrs and customer_360 unchanged") {
+    val inc = IncrementalLakehouse(spark, fresh())
+    stepWaves(inc, rawWaves)
+    val attrsBefore = rows(inc.sessionAttrs.read())
+    val c360Before = rows(inc.goldRelations(AsOf, LoadTs)("customer_360"))
+
+    // wave 3: session "2" re-delivered with a CHANGED customer but an
+    // audit older than the stored row's (the adapter stamps 2024-02-01)
+    // — it loses the latest-wins compare, so nothing re-attributes
+    inc.step(attrsWave(Seq(
+      ("2", "9", Timestamp.valueOf("2024-01-03 08:59:00"), "app", "email", "DE")),
+      Timestamp.valueOf("2024-01-15 00:00:00")), 3L, AsOf, LoadTs)
+    assert(rows(inc.sessionAttrs.read()) == attrsBefore,
+      "an older re-delivery must not replace the stored attrs")
+    assert(rows(inc.goldRelations(AsOf, LoadTs)("customer_360")) == c360Before,
+      "an older re-delivery must not move customer_360")
+
+    // wave 4: a session row with a null session_id reaches the
+    // append-only sessions silver but never the attrs table
+    inc.step(attrsWave(Seq(
+      (null, "4", Timestamp.valueOf("2024-01-05 07:00:00"), "app", "email", "DE")),
+      Timestamp.valueOf("2024-05-01 00:00:00")), 4L, AsOf, LoadTs)
+    assert(inc.sessionsClean.read().filter(col("session_id").isNull).count() == 1L,
+      "the null-session row must land in sessions_clean")
+    assert(rows(inc.sessionAttrs.read()) == attrsBefore,
+      "a null session_id must never land in _session_attrs")
+    assert(rows(inc.goldRelations(AsOf, LoadTs)("customer_360")) == c360Before,
+      "a null-session attrs row must not move customer_360")
+  }
+
   test("bounded-auth shape (forced via conf) re-attributes identically to the full join") {
     // the size gate keeps toy tables on the plain full-join recompute;
     // forcing the threshold to 0 drives the BOUNDED shape — dimension
@@ -372,7 +401,7 @@ class IncrementalLakehouseSpec extends SparkSuite {
       val b = seen.fold(b0)(sc => b0.updated("sessions",
         b0("sessions").join(sc, Seq("session_id"), "left_anti")))
       b.foreach { case (n, df) =>
-        val tmp = Files.createTempDirectory("graft-csvdrop").toString
+        val tmp = tempDir("graft-csvdrop")
         df.drop("_ingest_ts", "_source_file").coalesce(1)
           .write.option("header", "true").mode("overwrite").csv(tmp)
         val part = new java.io.File(tmp).listFiles()

@@ -13,7 +13,7 @@ import graft.SparkSuite
 class LakehouseIoSpec extends SparkSuite {
 
   test("readCsv: explicit schema ingest stamps audit columns; inferSchema variant matches reference") {
-    val dir = Files.createTempDirectory("graft-csv")
+    val dir = java.nio.file.Paths.get(tempDir("graft-csv"))
     val csv = dir.resolve("products.csv")
     Files.writeString(csv,
       """product_id,category,name,price_usd,cost_usd,margin_usd
@@ -29,7 +29,7 @@ class LakehouseIoSpec extends SparkSuite {
   }
 
   test("readCsvQuarantine captures malformed rows; splitQuarantine separates them") {
-    val dir = Files.createTempDirectory("graft-csv-bad")
+    val dir = java.nio.file.Paths.get(tempDir("graft-csv-bad"))
     val csv = dir.resolve("products.csv")
     // row 3 carries two EXTRA fields, row 5 is a bare fragment — the
     // token-count corruption classes a dirty 100 TB ingest actually has
@@ -58,7 +58,7 @@ class LakehouseIoSpec extends SparkSuite {
   }
 
   test("partitioned sink lays out date directories and prunes on read") {
-    val dir = Files.createTempDirectory("graft-wh").toString
+    val dir = tempDir("graft-wh")
     val lh = Lakehouse(spark, dir)
     val silver = Silver.transformAll(EcomFixtures.bronze(spark))
     lh.write("events_clean", silver("events_clean"))
@@ -81,7 +81,7 @@ class LakehouseIoSpec extends SparkSuite {
   }
 
   test("upsert: latest-wins merge rewrites ONLY the touched partitions") {
-    val dir = Files.createTempDirectory("graft-upsert").toString
+    val dir = tempDir("graft-upsert")
     val lh = Lakehouse(spark, dir)
     val silver = Silver.transformAll(EcomFixtures.bronze(spark))
     // two partitions: the fixture day plus a shifted copy one day later
@@ -121,7 +121,7 @@ class LakehouseIoSpec extends SparkSuite {
 
   test("upsert chunks a many-partition update batch into composable merges") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-upsert-chunk").toString
+    val dir = tempDir("graft-upsert-chunk")
     val lh = Lakehouse(spark, dir)
     def d(i: Int) = java.sql.Date.valueOf(java.time.LocalDate.of(2025, 1, 1).plusDays(i))
     // 20 partitions, 2 rows each (key = product_id, versioned by views)
@@ -146,7 +146,7 @@ class LakehouseIoSpec extends SparkSuite {
 
   test("overwritePartitions refreshes only the partitions present in the new data") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-refresh").toString
+    val dir = tempDir("graft-refresh")
     val lh = Lakehouse(spark, dir)
     def d(s: String) = java.sql.Date.valueOf(s)
     lh.write("product_metrics", Seq(
@@ -167,7 +167,7 @@ class LakehouseIoSpec extends SparkSuite {
 
   test("compact collapses a partition's accumulated files into one") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-compact").toString
+    val dir = tempDir("graft-compact")
     val lh = Lakehouse(spark, dir)
     def d(s: String) = java.sql.Date.valueOf(s)
     // simulate an incremental sink: several appends into one date dir
@@ -185,7 +185,7 @@ class LakehouseIoSpec extends SparkSuite {
 
   test("compact rejects catalog-backed bucketed tables (would corrupt bucket layout)") {
     import spark.implicits._
-    val lh = Lakehouse(spark, Files.createTempDirectory("graft-cb").toString)
+    val lh = Lakehouse(spark, tempDir("graft-cb"))
     lh.writeBucketed("tbkt", Seq((1, "a")).toDF("k", "v"), Seq("k"), 2)
     try intercept[IllegalArgumentException](lh.compact("tbkt"))
     finally lh.dropTable("tbkt")
@@ -193,7 +193,7 @@ class LakehouseIoSpec extends SparkSuite {
 
   test("schema evolution: overwrite replaces the schema; mergeSchema unions mixed partitions") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-evolve").toString
+    val dir = tempDir("graft-evolve")
     val lh = Lakehouse(spark, dir)
     lh.write("products_dim", Seq((1, "widget")).toDF("product_id", "name"))
     // reference S4: overwriteSchema is Delta-only; parquet overwrite
@@ -211,7 +211,7 @@ class LakehouseIoSpec extends SparkSuite {
 
   test("upsert into the null partition merges instead of deleting existing rows") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-upsert-null").toString
+    val dir = tempDir("graft-upsert-null")
     val lh = Lakehouse(spark, dir)
     // events_clean-shaped minimal table: key, order col, partition col
     def row(id: String, ts: String, d: Option[String]) =
@@ -232,7 +232,7 @@ class LakehouseIoSpec extends SparkSuite {
   }
 
   test("bucketed tables join with zero exchanges (co-located big-big join)") {
-    val dir = Files.createTempDirectory("graft-bucket").toString
+    val dir = tempDir("graft-bucket")
     val lh = Lakehouse(spark, dir)
     val silver = Silver.transformAll(EcomFixtures.bronze(spark))
     lh.writeBucketed("orders_bkt", silver("orders_clean"), Seq("order_id"), 4)
@@ -260,8 +260,8 @@ class LakehouseIoSpec extends SparkSuite {
 
   test("bucketed tables from different warehouses do not clobber each other") {
     import spark.implicits._
-    val lhA = Lakehouse(spark, Files.createTempDirectory("graft-wa").toString)
-    val lhB = Lakehouse(spark, Files.createTempDirectory("graft-wb").toString)
+    val lhA = Lakehouse(spark, tempDir("graft-wa"))
+    val lhB = Lakehouse(spark, tempDir("graft-wb"))
     try {
       lhA.writeBucketed("t", Seq((1, "a")).toDF("k", "v"), Seq("k"), 2)
       lhB.writeBucketed("t", Seq((2, "b")).toDF("k", "v"), Seq("k"), 2)
@@ -276,7 +276,7 @@ class LakehouseIoSpec extends SparkSuite {
     // replaying the core layout/pruning/upsert contracts under ORC and
     // comparing row-for-row against the parquet lakehouse
     val silver = Silver.transformAll(EcomFixtures.bronze(spark))
-    val orcDir = Files.createTempDirectory("graft-orc").toString
+    val orcDir = tempDir("graft-orc")
     val orc = Lakehouse(spark, orcDir, format = "orc")
     orc.write("events_clean", silver("events_clean"))
     // physical layout: date directories holding ORC (not parquet) files
@@ -291,7 +291,7 @@ class LakehouseIoSpec extends SparkSuite {
     assert(pruned.count() == 5)
     assert(scanned.contains("PartitionFilters") && scanned.contains("event_date"))
     // read-back parity with the parquet lakehouse
-    val pq = Lakehouse(spark, Files.createTempDirectory("graft-pq-ctl").toString)
+    val pq = Lakehouse(spark, tempDir("graft-pq-ctl"))
     pq.write("events_clean", silver("events_clean"))
     assert(orc.read("events_clean").exceptAll(pq.read("events_clean")).isEmpty)
     assert(pq.read("events_clean").exceptAll(orc.read("events_clean")).isEmpty)

@@ -19,7 +19,7 @@ class MergeSkippingSpec extends SparkSuite {
   import spark.implicits._
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-mskip").toString
+    tempDir("graft-mskip")
 
   /** 4 range-clustered files: ids [0,100), [100,200), [200,300),
     * [300,400) — each file's stats range is its own slice.

@@ -29,7 +29,7 @@ class ReferenceSqlFileSpec extends SparkSuite {
   private val refDir = Paths.get("/root/reference/analysis/dashboard_queries")
 
   private val warehouse: String = {
-    val dir = Files.createTempDirectory("graft-refsql-warehouse").toString
+    val dir = tempDir("graft-refsql-warehouse")
     spark.conf.set("spark.sql.catalog.ecom_catalog",
       classOf[graft.sql.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.ecom_catalog.warehouse", dir)

@@ -14,7 +14,6 @@ import graft.SparkSuite
   * re-run of a 100 TB export is bit-reproducible and resumable.
   */
 class ShardSinkSpec extends SparkSuite {
-  import spark.implicits._
 
   private val nShards = 8
 
@@ -27,7 +26,7 @@ class ShardSinkSpec extends SparkSuite {
       .map(r => (r.getLong(0), r.getString(1))).toSeq
 
   test("writeShards: one file per shard, every row exactly once, near-uniform sizes") {
-    val dir = Files.createTempDirectory("graft-shards").toString
+    val dir = tempDir("graft-shards")
     Lakehouse(spark, dir).writeShards("shards", corpus, nShards, seed = 42L)
     val shardDirs = Files.list(Paths.get(dir, "shards")).toArray.map(_.toString)
       .filter(_.contains("shard="))
@@ -46,8 +45,8 @@ class ShardSinkSpec extends SparkSuite {
   }
 
   test("writeShards: placement and within-shard order are content-deterministic across input layouts") {
-    val dirA = Files.createTempDirectory("graft-shards-a").toString
-    val dirB = Files.createTempDirectory("graft-shards-b").toString
+    val dirA = tempDir("graft-shards-a")
+    val dirB = tempDir("graft-shards-b")
     Lakehouse(spark, dirA).writeShards("shards", corpus.repartition(3), nShards, seed = 42L)
     Lakehouse(spark, dirB).writeShards("shards", corpus.coalesce(1).orderBy(desc("doc_id")),
       nShards, seed = 42L)
@@ -55,7 +54,7 @@ class ShardSinkSpec extends SparkSuite {
       assert(readShard(dirA, s) == readShard(dirB, s),
         s"shard $s content/order differs across input layouts")
     // a different seed is a different global shuffle
-    val dirC = Files.createTempDirectory("graft-shards-c").toString
+    val dirC = tempDir("graft-shards-c")
     Lakehouse(spark, dirC).writeShards("shards", corpus, nShards, seed = 7L)
     assert((0L until nShards).exists(s => readShard(dirA, s) != readShard(dirC, s)),
       "seed must change the shuffle")
@@ -63,7 +62,7 @@ class ShardSinkSpec extends SparkSuite {
 
   test("writeShards rejects a clashing shard column and bad counts") {
     val df = corpus.withColumn("shard", lit(1L))
-    val lh = Lakehouse(spark, Files.createTempDirectory("graft-shards-r").toString)
+    val lh = Lakehouse(spark, tempDir("graft-shards-r"))
     intercept[IllegalArgumentException] { lh.writeShards("s", df, nShards, 1L) }
     intercept[IllegalArgumentException] { lh.writeShards("s", corpus, 0, 1L) }
   }
@@ -72,7 +71,7 @@ class ShardSinkSpec extends SparkSuite {
     // a MapType column can be neither xxhash64'd nor sorted — the
     // contract (hash+sort EVERY column) must fail fast naming the
     // column, not surface an analysis error about internal expressions
-    val lh = Lakehouse(spark, Files.createTempDirectory("graft-shards-m").toString)
+    val lh = Lakehouse(spark, tempDir("graft-shards-m"))
     val withMap = corpus.withColumn("attrs", map(lit("k"), lit("v")))
     val e = intercept[IllegalArgumentException] { lh.writeShards("s", withMap, nShards, 1L) }
     assert(e.getMessage.contains("attrs"))

@@ -1,6 +1,5 @@
 package graft.ecom
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
@@ -37,7 +36,7 @@ class VacuumCrashSpec extends SparkSuite {
   test("crash mid-vacuum leaves every still-listed version's chain intact") {
     spark.sparkContext.hadoopConfiguration
       .setClass("fs.crashvac.impl", classOf[CrashingDeleteFs], classOf[FileSystem])
-    val local = Files.createTempDirectory("graft-vac-crash").toString
+    val local = tempDir("graft-vac-crash")
     val vt = VersionedTable(spark, local)
     vt.commitOverwrite((1L to 10L).toDF("id")) // v1: full manifest
     (2 to 6).foreach(i => vt.commitAppend(Seq(i * 100L).toDF("id"))) // v2..v6: deltas

@@ -1,7 +1,5 @@
 package graft.ecom
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.{col, concat, lit}
 
 import graft.SparkSuite
@@ -19,7 +17,7 @@ class VersionedBloomSpec extends SparkSuite {
   import spark.implicits._
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-vtbloom").toString
+    tempDir("graft-vtbloom")
 
   /** ids 0..3999 + a doc-id string, spread UNCLUSTERED over 8 files
     * (round-robin), so every file's [min, max] covers ~the whole domain

@@ -1,7 +1,5 @@
 package graft.ecom
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.{col, lit}
 
 import graft.SparkSuite
@@ -18,7 +16,7 @@ class VersionedColmapSpec extends SparkSuite {
   import spark.implicits._
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-vtcolmap").toString
+    tempDir("graft-vtcolmap")
 
   private def table(): VersionedTable = {
     val vt = VersionedTable(spark, freshDir())

@@ -1,6 +1,5 @@
 package graft.ecom
 
-import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import org.apache.hadoop.fs.FileSystem
@@ -20,7 +19,7 @@ class VersionedConstraintSpec extends SparkSuite {
   import spark.implicits._
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-vtcons").toString
+    tempDir("graft-vtcons")
 
   private def scored(dir: String): VersionedTable = {
     val vt = VersionedTable(spark, dir)

@@ -1,6 +1,5 @@
 package graft.ecom
 
-import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
@@ -55,7 +54,7 @@ class VersionedCowSpec extends SparkSuite {
   import spark.implicits._
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-vtcow").toString
+    tempDir("graft-vtcow")
 
   /** ids 0..3999 spread over 4 range-disjoint files, stats on id. */
   private def rangedTable(dir: String): VersionedTable = {

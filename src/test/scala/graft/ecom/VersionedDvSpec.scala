@@ -1,7 +1,5 @@
 package graft.ecom
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.{col, lit}
 
 import graft.SparkSuite
@@ -18,7 +16,7 @@ class VersionedDvSpec extends SparkSuite {
   import spark.implicits._
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-vtdv").toString
+    tempDir("graft-vtdv")
 
   /** ids 0..3999 spread over 4 range-disjoint files, stats on id. */
   private def rangedTable(dir: String): VersionedTable = {

@@ -1,7 +1,5 @@
 package graft.ecom
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSuite
@@ -14,12 +12,11 @@ import graft.SparkSuite
   * markers, vacuum) is unchanged.
   */
 class VersionedLogGrowthSpec extends SparkSuite {
-  import spark.implicits._
 
   private val N = 1000
 
   test(s"$N micro-batch appends: delta manifests keep the log subquadratic") {
-    val dir = Files.createTempDirectory("graft-loggrowth").toString
+    val dir = tempDir("graft-loggrowth")
     val vt = VersionedTable(spark, dir)
     (0 until N).foreach { i =>
       vt.commitAppendBatch(spark.range(i, i + 1L).toDF("id"), i.toLong)
@@ -70,7 +67,7 @@ class VersionedLogGrowthSpec extends SparkSuite {
   }
 
   test("delta log composes with COW delete, DV, restore, and a racing reader") {
-    val dir = Files.createTempDirectory("graft-loggrowth2").toString
+    val dir = tempDir("graft-loggrowth2")
     val vt = VersionedTable(spark, dir)
     vt.commitOverwrite(spark.range(0, 40).toDF("id").repartition(4))
     (0 until 6).foreach(i => vt.commitAppend(spark.range(40 + i * 5L, 45 + i * 5L).toDF("id")))

@@ -1,7 +1,5 @@
 package graft.ecom
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.{col, lit}
 
 import graft.SparkSuite
@@ -17,7 +15,7 @@ class VersionedMergeMatrixSpec extends SparkSuite {
   import spark.implicits._
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-mergematrix").toString
+    tempDir("graft-mergematrix")
 
   /** (id, qty, tag): ids 0..399 over 4 range-disjoint files. */
   private def seeded(): VersionedTable = {

@@ -1,7 +1,5 @@
 package graft.ecom
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSuite
@@ -15,7 +13,7 @@ class VersionedPipeSpec extends SparkSuite {
   import spark.implicits._
 
   private def fresh(name: String) =
-    VersionedTable(spark, Files.createTempDirectory(name).toString)
+    VersionedTable(spark, tempDir(name))
 
   test("bootstrap, delta-only steps, and replay no-op — exactly once end to end") {
     val src = fresh("graft-pipe-src")

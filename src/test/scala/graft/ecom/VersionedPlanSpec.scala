@@ -1,7 +1,5 @@
 package graft.ecom
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSuite
@@ -15,11 +13,10 @@ import graft.SparkSuite
   * 100 TB; this spec is the tripwire.
   */
 class VersionedPlanSpec extends SparkSuite {
-  import spark.implicits._
 
   private def table(): VersionedTable = {
     val vt = VersionedTable(spark,
-      Files.createTempDirectory("graft-vtplan").toString, statsColumns = Seq("id"))
+      tempDir("graft-vtplan"), statsColumns = Seq("id"))
     vt.commitOverwrite(spark.range(0, 10000).toDF("id")
       .withColumn("a", col("id") * 2).withColumn("b", col("id") * 3)
       .repartitionByRange(4, col("id")))

@@ -1,7 +1,5 @@
 package graft.ecom
 
-import java.nio.file.Files
-
 import graft.SparkSuite
 
 /** Model-based randomized check of the versioned table format: a seeded
@@ -25,7 +23,7 @@ class VersionedTableModelSpec extends SparkSuite {
     for (seed <- Seq(11, 23, 47)) {
       val rnd = new scala.util.Random(seed)
       val vt = VersionedTable(spark,
-        Files.createTempDirectory(s"graft-vtmodel-$seed").toString)
+        tempDir(s"graft-vtmodel-$seed"))
       // model(v-1) = the sorted id sequence version v must replay
       var model = Vector.empty[Seq[Long]]
       var vacuumedBelow = 0 // versions <= this are gone

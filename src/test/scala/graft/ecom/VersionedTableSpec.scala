@@ -1,7 +1,5 @@
 package graft.ecom
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions.{col, lit}
 
@@ -42,7 +40,7 @@ class VersionedTableSpec extends SparkSuite {
   import spark.implicits._
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-vt").toString
+    tempDir("graft-vt")
 
   test("overwrite commits bump versions; readAt replays history byte-identically") {
     val vt = VersionedTable(spark, freshDir())

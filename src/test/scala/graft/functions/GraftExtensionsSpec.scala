@@ -71,7 +71,7 @@ class GraftExtensionsSpec extends SparkSuite {
 
   test("graft_ivf_search: both probe faces, defaults nprobe=4/topk=5, bad args refuse") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfsearch").toString
+    val dir = tempDir("graft-ivfsearch")
     // a tiny deterministic corpus (vec_id, 4-dim float embedding) —
     // written as the embeddings parquet layout writeIvfIndex expects
     val rnd = new scala.util.Random(7)

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
 
@@ -20,7 +18,7 @@ import graft.ecom.VersionedTable
 class IncrementalAggMinMaxSpec extends SparkSuite {
   import spark.implicits._
 
-  private def fresh(): String = Files.createTempDirectory("graft-ivmx").toString
+  private def fresh(): String = tempDir("graft-ivmx")
 
   // silver rows: (id, grp, amt) — amt strictly increasing in id, so the
   // max of a group is always its largest id (easy to delete on purpose)

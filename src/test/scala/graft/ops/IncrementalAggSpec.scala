@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, count, lit, sum}
 
@@ -17,7 +15,7 @@ import graft.ecom.VersionedTable
 class IncrementalAggSpec extends SparkSuite {
   import spark.implicits._
 
-  private def fresh(): String = Files.createTempDirectory("graft-ivm").toString
+  private def fresh(): String = tempDir("graft-ivm")
 
   // silver rows: (id, grp, amt); gold: grp -> (n, total)
   private def rows(r: Range): DataFrame =

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, concat, length, lit, upper}
 
@@ -18,7 +16,7 @@ import graft.ecom.VersionedTable
 class IncrementalMapSpec extends SparkSuite {
   import spark.implicits._
 
-  private def fresh(): String = Files.createTempDirectory("graft-ivmmap").toString
+  private def fresh(): String = tempDir("graft-ivmmap")
 
   private def docs(r: Range, tag: String = "w"): DataFrame =
     r.map(i => (i.toLong, s"alpha$tag$i beta gamma delta epsilon zeta"))

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSuite
@@ -24,12 +22,12 @@ class ZOrderSpec extends SparkSuite {
 
   test("z-order gives file-level locality on BOTH dimensions; linear sort on one only") {
     val n = 16
-    val zDir = Files.createTempDirectory("graft-zorder").toString
+    val zDir = tempDir("graft-zorder")
     val zvt = VersionedTable(spark, zDir, statsColumns = Seq("x", "y"))
     zvt.commitOverwrite(ZOrder.cluster(grid(), Seq("x", "y"), n))
     assert(zvt.read().inputFiles.length == n)
 
-    val linDir = Files.createTempDirectory("graft-linear").toString
+    val linDir = tempDir("graft-linear")
     val lvt = VersionedTable(spark, linDir, statsColumns = Seq("x", "y"))
     lvt.commitOverwrite(grid().repartitionByRange(n, col("x")).sortWithinPartitions("x"))
 

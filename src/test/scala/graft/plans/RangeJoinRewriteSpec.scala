@@ -2,8 +2,6 @@ package graft.plans
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSuite
 
 /** The optimizer-rule tier: a NAIVE point-in-interval join (no equi key

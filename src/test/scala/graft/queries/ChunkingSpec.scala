@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.execution.exchange.Exchange
-import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 

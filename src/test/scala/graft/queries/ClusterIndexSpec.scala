@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.FileSourceScanExec
 
 import graft.SparkSuite
@@ -19,7 +17,7 @@ class ClusterIndexSpec extends SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("consumer reads only the artifact and matches the direct clustering") {
-    val art = Files.createTempDirectory("graft-clidx").toString
+    val art = tempDir("graft-clidx")
     LlmDedup.writeClusterIndex(spark, sfDir, art)
 
     val consumer = LlmDedup.readClusterIndex(spark, art)

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSuite
 
 /** qd20's contract: a short doc pasted inside a long one is a

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.FileSourceScanExec
 
 import graft.SparkSuite
@@ -21,7 +19,7 @@ class IvfArtifactSpec extends SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("probe path reads only the artifact and matches qs03 exactly") {
-    val art = Files.createTempDirectory("graft-ivfidx").toString
+    val art = tempDir("graft-ivfidx")
     LlmSimilarity.writeIvfIndex(spark, sfDir, art)
 
     val probe = LlmSimilarity.readIvfTopK(spark, art)
@@ -51,7 +49,7 @@ class IvfArtifactSpec extends SparkSuite {
   }
 
   test("inverted lists are cell-partitioned; centroids are k bounded rows") {
-    val art = Files.createTempDirectory("graft-ivfidx2").toString
+    val art = tempDir("graft-ivfidx2")
     LlmSimilarity.writeIvfIndex(spark, sfDir, art)
     val cellDirs = new java.io.File(s"$art/lists").listFiles()
       .filter(_.isDirectory).map(_.getName).filter(_.startsWith("cell=")).toSeq

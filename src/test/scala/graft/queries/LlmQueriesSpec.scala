@@ -76,7 +76,7 @@ class LlmQueriesSpec extends SparkSuite {
     val exact = LlmSimilarity.qs01.fn(spark, dir)
       .select("query_id", "neighbor_id", "cos_sim").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val ivf = LlmSimilarity.qs02.fn(spark, dir) // warm plans; qs03 below
+    LlmSimilarity.qs02.fn(spark, dir) // warm plans; qs03 below
     val got = LlmSimilarity.qs03.fn(spark, dir)
       .select("query_id", "neighbor_id", "cos_sim").collect()
     assert(got.nonEmpty)
@@ -255,7 +255,7 @@ class LlmQueriesSpec extends SparkSuite {
     val docs = graft.util.Tables.load(spark, dir, "documents")
     val index = LlmDedup.lshSignatures(docs.filter(col("doc_id") % 2 === 0))
     val batch = LlmDedup.lshSignatures(docs.filter(col("doc_id") % 2 === 1))
-    val out = java.nio.file.Files.createTempDirectory("graft-sigidx")
+    val out = tempDir("graft-sigidx")
     try {
       index.write.mode("overwrite").parquet(s"$out/sig_index")
       val fromDisk = spark.read.parquet(s"$out/sig_index")
@@ -271,9 +271,6 @@ class LlmQueriesSpec extends SparkSuite {
       // other suites' entries in the shared session)
       index.unpersist(blocking = false)
       batch.unpersist(blocking = false)
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(out).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -332,7 +329,7 @@ class LlmQueriesSpec extends SparkSuite {
     conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
     conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val out = java.nio.file.Files.createTempDirectory("qd18bloom")
+    val out = tempDir("qd18bloom")
     try {
       val docsDf = graft.util.Tables.load(spark, dir, "documents")
       // the qd13 discipline: the shingle relation materialized as a
@@ -340,8 +337,8 @@ class LlmQueriesSpec extends SparkSuite {
       docsDf.select(col("doc_id"), col("source"),
           explode(array_distinct(graft.functions.TextFns.shingles(col("text"), 3))).as("g"))
         .select(col("doc_id"), col("source"), xxhash64(col("g")).as("g"))
-        .write.mode("overwrite").parquet(out.toString)
-      val sil = spark.read.parquet(out.toString)
+        .write.mode("overwrite").parquet(out)
+      val sil = spark.read.parquet(out)
       val bench = sil.filter(col("source") === "src0").select("g").distinct()
       val probe = sil.filter(col("source") =!= "src0")
         .join(bench.hint("merge"), Seq("g"))
@@ -356,9 +353,6 @@ class LlmQueriesSpec extends SparkSuite {
         "inline-explode shape unexpectedly accepted a bloom filter — update qd18 docs")
     } finally {
       saved.foreach { case (k, Some(v)) => conf.set(k, v); case (k, None) => conf.unset(k) }
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(out).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 

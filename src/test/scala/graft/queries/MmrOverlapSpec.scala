@@ -68,9 +68,9 @@ class MmrOverlapSpec extends SparkSuite {
       mk(8, "sc", "gamma"),
       mk(9, "sd", "omega") // overlaps nobody
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft-overlap")
+    val dir = tempDir("graft-overlap")
     docsDf.write.parquet(s"$dir/documents.parquet")
-    val got = LlmDedup.qd17.fn(spark, dir.toString).collect()
+    val got = LlmDedup.qd17.fn(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5))).toMap
     // sa={alpha,beta,gamma} (3 distinct), sb={alpha,beta,delta}, sc={gamma}

@@ -12,7 +12,6 @@ import graft.SparkSuite
   * operator must never degrade to a single-partition global sort.
   */
 class SeqPackingSpec extends SparkSuite {
-  import spark.implicits._
 
   private def corpus(n: Int) = spark.range(0, n).select(
     col("id").as("doc_id"),

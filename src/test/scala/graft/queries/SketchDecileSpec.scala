@@ -11,7 +11,6 @@ import graft.SparkSuite
   * agreeing with exact ntile everywhere but a bounded boundary fringe.
   */
 class SketchDecileSpec extends SparkSuite {
-  import spark.implicits._
 
   test("qt18 plan contains no Window operator; neither does qt15 (r18)") {
     val dir = "/root/testdata/sf0.001"

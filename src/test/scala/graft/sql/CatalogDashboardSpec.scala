@@ -1,6 +1,5 @@
 package graft.sql
 
-import java.nio.file.Files
 import java.time.LocalDate
 
 import org.apache.spark.sql.DataFrame
@@ -20,7 +19,7 @@ class CatalogDashboardSpec extends SparkSuite {
   // own catalog name: catalog instances are cached per session with the
   // warehouse they were initialized with, so suites must not share one
   private val warehouse: String = {
-    val dir = Files.createTempDirectory("graft-ecom-warehouse").toString
+    val dir = tempDir("graft-ecom-warehouse")
     spark.conf.set("spark.sql.catalog.ecom", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.ecom.warehouse", dir)
     new java.io.File(s"$dir/gold").mkdirs()

@@ -1,7 +1,5 @@
 package graft.sql
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,7 +19,7 @@ import graft.ecom.{EcomFixtures, Gold, Silver, VersionedTable}
 class DeclarativeGoldSpec extends SparkSuite {
 
   private val warehouse: String = {
-    val dir = Files.createTempDirectory("graft-declgold-wh").toString
+    val dir = tempDir("graft-declgold-wh")
     spark.conf.set("spark.sql.catalog.gdg", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gdg.warehouse", dir)
     new java.io.File(s"$dir/db").mkdirs()

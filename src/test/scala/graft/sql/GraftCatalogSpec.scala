@@ -1,7 +1,5 @@
 package graft.sql
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions.col
@@ -21,7 +19,7 @@ class GraftCatalogSpec extends SparkSuite {
 
   // eager: every test needs the catalog registered before its first SQL
   private val warehouse: String = {
-    val dir = Files.createTempDirectory("graft-warehouse").toString
+    val dir = tempDir("graft-warehouse")
     spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft.warehouse", dir)
     new java.io.File(s"$dir/bronze").mkdirs()
@@ -229,7 +227,7 @@ class GraftCatalogSpec extends SparkSuite {
   }
 
   test("format(\"graft\") reads a table by path, with version options") {
-    val dir = Files.createTempDirectory("graft-ds-path").toString
+    val dir = tempDir("graft-ds-path")
     val vt = VersionedTable(spark, dir)
     vt.commitOverwrite((1L to 7L).toDF("id"))
     vt.commitAppend((8L to 11L).toDF("id"))
@@ -238,7 +236,7 @@ class GraftCatalogSpec extends SparkSuite {
   }
 
   test("path reads at an old version present the OLD schema under evolution") {
-    val dir = Files.createTempDirectory("graft-ds-evolve").toString
+    val dir = tempDir("graft-ds-evolve")
     val vt = VersionedTable(spark, dir)
     vt.commitOverwrite(Seq((1L, "a")).toDF("id", "v"))
     vt.commitAppend(Seq((2L, "b", 7L)).toDF("id", "v", "extra"))
@@ -532,7 +530,7 @@ class GraftCatalogSpec extends SparkSuite {
   }
 
   test("graft_history TVF: DESCRIBE HISTORY from plain SQL") {
-    val dir = Files.createTempDirectory("graft-tvf-hist").toString
+    val dir = tempDir("graft-tvf-hist")
     val vt = VersionedTable(spark, dir)
     vt.commitOverwrite((1L to 5L).toDF("id"))
     vt.commitAppend((6L to 8L).toDF("id"))

@@ -1,7 +1,5 @@
 package graft.sql
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -26,7 +24,7 @@ class GraftCdfSqlSpec extends SparkSuite {
   import spark.implicits._
 
   private val warehouse: String = {
-    val dir = Files.createTempDirectory("graft-cdf-wh").toString
+    val dir = tempDir("graft-cdf-wh")
     spark.conf.set("spark.sql.catalog.gcdf", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gcdf.warehouse", dir)
     new java.io.File(s"$dir/db").mkdirs()
@@ -110,7 +108,7 @@ class GraftCdfSqlSpec extends SparkSuite {
   }
 
   test("graft_detail TVF: one manifest-sourced metadata row (DESCRIBE DETAIL)") {
-    val dir = Files.createTempDirectory("graft-detail").toString
+    val dir = tempDir("graft-detail")
     val vt = VersionedTable(spark, dir)
     vt.commitAppend(Seq((1L, 10L), (2L, 20L)).toDF("id", "amt"))
     vt.setTableProperty("graft.enableChangeDataFeed", "true")
@@ -126,7 +124,7 @@ class GraftCdfSqlSpec extends SparkSuite {
   }
 
   test("path read: readChangeFeed options serve the feed; misuse matrix refuses") {
-    val dir = Files.createTempDirectory("graft-cdf-path").toString
+    val dir = tempDir("graft-cdf-path")
     val vt = VersionedTable(spark, dir)
     vt.commitAppend(Seq((1L, 10L), (2L, 20L)).toDF("id", "amt"))
     vt.setTableProperty("graft.enableChangeDataFeed", "true")

@@ -1,7 +1,5 @@
 package graft.sql
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -17,7 +15,7 @@ class GraftViewSpec extends SparkSuite {
   import spark.implicits._
 
   private val warehouse: String = {
-    val dir = Files.createTempDirectory("graft-view-wh").toString
+    val dir = tempDir("graft-view-wh")
     spark.conf.set("spark.sql.catalog.gvw", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gvw.warehouse", dir)
     new java.io.File(s"$dir/db").mkdirs()

@@ -1,9 +1,5 @@
 package graft.sql
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.functions._
-
 import graft.SparkSuite
 import graft.ecom.VersionedTable
 
@@ -16,7 +12,7 @@ class MaintenanceDdlSpec extends SparkSuite {
   import spark.implicits._
 
   private val warehouse: String = {
-    val dir = Files.createTempDirectory("graft-mddl-wh").toString
+    val dir = tempDir("graft-mddl-wh")
     spark.conf.set("spark.sql.catalog.gmnt", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gmnt.warehouse", dir)
     new java.io.File(s"$dir/db").mkdirs()

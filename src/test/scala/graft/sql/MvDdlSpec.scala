@@ -1,7 +1,5 @@
 package graft.sql
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
@@ -21,7 +19,7 @@ class MvDdlSpec extends SparkSuite {
   import spark.implicits._
 
   private val warehouse: String = {
-    val dir = Files.createTempDirectory("graft-mvddl-wh").toString
+    val dir = tempDir("graft-mvddl-wh")
     spark.conf.set("spark.sql.catalog.gmv", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gmv.warehouse", dir)
     new java.io.File(s"$dir/db").mkdirs()

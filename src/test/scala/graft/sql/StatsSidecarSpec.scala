@@ -1,7 +1,5 @@
 package graft.sql
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions.col
@@ -26,7 +24,7 @@ class StatsSidecarSpec extends SparkSuite {
   import spark.implicits._
 
   private val warehouse: String = {
-    val dir = Files.createTempDirectory("graft-sidecar-wh").toString
+    val dir = tempDir("graft-sidecar-wh")
     spark.conf.set("spark.sql.catalog.graftsc", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graftsc.warehouse", dir)
     new java.io.File(s"$dir/b").mkdirs()
@@ -194,7 +192,7 @@ class StatsSidecarSpec extends SparkSuite {
   }
 
   test("legacy manifests without recorded sizes plan via a batched listing") {
-    val dir = Files.createTempDirectory("graft-legacy-sizes").toString
+    val dir = tempDir("graft-legacy-sizes")
     val vt = VersionedTable(spark, dir, statsColumns = Seq("id"))
     commitEightDisjointFiles(vt)
     // simulate a pre-size manifest: strip the length/mtime fields off

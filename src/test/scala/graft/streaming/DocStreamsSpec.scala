@@ -23,7 +23,7 @@ class DocStreamsSpec extends SparkSuite {
   private val junkText = "zzz zzz zzz zzz zzz zzz zzz zzz zzz zzz zzz zzz"
 
   test("curate: dedups across triggers, drops junk, and scrubs PII — batch parity") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-docsrc")
+    val dir = tempDir("graft-docsrc")
     val piiText = goodText + " contact jane9@corp.io or +1-555-0011 at 10.1.2.3"
     val batch1 = Seq(doc(1L, goodText), doc(2L, junkText), doc(3L, piiText))
     val batch2 = Seq(
@@ -77,7 +77,7 @@ class DocStreamsSpec extends SparkSuite {
   }
 
   test("NULL-text docs pass dedup untouched and pack as zero tokens") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-docnull")
+    val dir = tempDir("graft-docnull")
     // two DISTINCT no-content docs + one real dup pair
     Seq((1L, Option(goodText), "en", "s0", 10L),
         (2L, Option.empty[String], "en", "s0", 0L),
@@ -111,7 +111,7 @@ class DocStreamsSpec extends SparkSuite {
     def mk(id: Long) = doc(id, Seq.tabulate((id % 13).toInt + 1)(i => s"w$i").mkString(" "))
     val batch1 = (0L until 37L).map(mk)
     val batch2 = (37L until 60L).map(mk)
-    val dir = java.nio.file.Files.createTempDirectory("graft-packsrc")
+    val dir = tempDir("graft-packsrc")
     // ONE file per drop: the determinism contract assumes ordered drops,
     // and a multi-part drop's files may be listed across trigger
     // boundaries in arbitrary order (a rare but real race — the split
@@ -138,7 +138,7 @@ class DocStreamsSpec extends SparkSuite {
   }
 
   test("writeCurated lands idempotent batch/source-partitioned parquet") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-docsink")
+    val dir = tempDir("graft-docsink")
     Seq(doc(1L, goodText), doc(2L, goodText + " tail", "s1"))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("append").parquet(s"$dir/in")
@@ -161,7 +161,7 @@ class DocStreamsSpec extends SparkSuite {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val indexSig = LlmDedup.lshSignatures(indexDocs)
     try {
-      val dir = java.nio.file.Files.createTempDirectory("graft-neardup")
+      val dir = tempDir("graft-neardup")
       val batch1 = Seq(
         doc(11L, base + " extra"), // near-dup of index doc 1 (and likely 2)
         doc(12L, "unrelated text with plenty of tokens to shingle but nothing in common whatsoever"))
@@ -196,7 +196,7 @@ class DocStreamsSpec extends SparkSuite {
   }
 
   test("distinctMonitor: cross-trigger sketch state matches batch hll_sketch_agg") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-docmon")
+    val dir = tempDir("graft-docmon")
     // s0 lands 5 docs / 3 distinct contents across two triggers (one
     // cross-trigger repeat); s1 lands 3 docs / 2 distinct
     def d(id: Long, content: Int, source: String) =
@@ -232,7 +232,7 @@ class DocStreamsSpec extends SparkSuite {
 
   test("dedupNewWithinHorizon: dups drop inside the horizon; state evicts past it") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ttldedup")
+    val dir = tempDir("graft-ttldedup")
     val schema = docSchema.add(StructField("ingest_ts", TimestampType))
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     def d(id: Long, text: String, at: String) =

@@ -128,7 +128,7 @@ class EventStreamsSpec extends SparkSuite {
 
   test("writeBronzeIncremental: appends date-partitioned parquet across triggers") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-bronze")
+    val dir = tempDir("graft-bronze")
     val in = MemoryStream[EventRow]
     val q = writeBronzeIncremental(in.toDF(), s"$dir/out", s"$dir/ckpt")
     in.addData(day1.take(3))
@@ -157,7 +157,7 @@ class EventStreamsSpec extends SparkSuite {
 
   test("readEvents: unbounded parquet-directory source feeds the windowed transforms") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-evsrc")
+    val dir = tempDir("graft-evsrc")
     day1.toDF().write.mode("append").parquet(s"$dir/in")
     val stream = readEvents(spark, s"$dir/in")
     assert(stream.isStreaming)

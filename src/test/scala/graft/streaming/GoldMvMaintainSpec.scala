@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -17,7 +15,7 @@ class GoldMvMaintainSpec extends SparkSuite {
   import spark.implicits._
 
   test("CDC-stream-triggered gold maintenance follows a silver DML storm") {
-    val dir = Files.createTempDirectory("graft-gold-mv").toString
+    val dir = tempDir("graft-gold-mv")
     val silver = VersionedTable(spark, s"$dir/events_clean")
     silver.commitAppend(Seq(
       (1L, "2024-01-01", "101", "page_view", 1.0),
@@ -76,7 +74,7 @@ class GoldMvMaintainSpec extends SparkSuite {
   }
 
   test("the streaming maintainer serves a DDL-created AVG view; the catalog face derives the ratio") {
-    val wh = Files.createTempDirectory("graft-gold-mv-avg").toString
+    val wh = tempDir("graft-gold-mv-avg")
     spark.conf.set("spark.sql.catalog.gsm", "graft.sql.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gsm.warehouse", wh)
     new java.io.File(s"$wh/db").mkdirs()

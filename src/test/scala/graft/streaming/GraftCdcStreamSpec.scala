@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSuite
@@ -22,7 +20,7 @@ class GraftCdcStreamSpec extends SparkSuite {
   private val CV = VersionedTable.CdcVersionCol
 
   private def fresh(name: String): String =
-    Files.createTempDirectory(name).toString
+    tempDir(name)
 
   test("feed stream: bootstrap + per-version batches across DML; replay no-op") {
     val dir = fresh("graft-cdc-stream")

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSuite
@@ -17,7 +15,7 @@ class GraftStreamSourceSpec extends SparkSuite {
   import spark.implicits._
 
   private def fresh(name: String): String =
-    Files.createTempDirectory(name).toString
+    tempDir(name)
 
   test("table-to-table stream: bootstrap, per-append batches, replay no-op — batch/stream parity") {
     val dir = fresh("graft-stream-src")
@@ -36,7 +34,6 @@ class GraftStreamSourceSpec extends SparkSuite {
     // bootstrap: the full v1 snapshot flows as one batch
     run()
     assert(dst.read().as[Long].collect().sorted.toSeq == (2L to 50L by 2))
-    val v1 = dst.versions().size
 
     // two more source commits; a resumed stream delivers ONLY the delta
     src.commitAppend((51L to 70L).toDF("id"))

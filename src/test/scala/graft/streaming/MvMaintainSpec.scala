@@ -1,8 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, count, min, sum}
 
 import graft.SparkSuite
@@ -19,7 +16,7 @@ class MvMaintainSpec extends SparkSuite {
   import spark.implicits._
 
   private def fresh(name: String): String =
-    Files.createTempDirectory(name).toString
+    tempDir(name)
 
   test("gold follows silver through a DML storm; restart is a no-op") {
     val dir = fresh("graft-mv-maintain")

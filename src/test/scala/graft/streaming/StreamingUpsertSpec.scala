@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSuite
@@ -15,7 +13,7 @@ class StreamingUpsertSpec extends SparkSuite {
   import spark.implicits._
 
   private def fresh(name: String): String =
-    Files.createTempDirectory(name).toString
+    tempDir(name)
 
   test("CDC stream upserts latest-wins per key; replays are no-ops; parity with batch") {
     val dir = fresh("graft-upsert")

@@ -1,6 +1,5 @@
 package graft.util
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -20,8 +19,7 @@ class TablesSpec extends SparkSuite {
   import spark.implicits._
 
   private def roundTrip(writeAs: String): (DataType, Long) = {
-    val dir = Files.createTempDirectory("tables-spec").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("tables-spec")
     val us = 1735689600123456L // 2025-01-01T00:00:00.123456Z
     val df = writeAs match {
       case "long_nanos" =>
@@ -35,7 +33,7 @@ class TablesSpec extends SparkSuite {
           .withColumn("ts", timestamp_micros(lit(us)))
     }
     df.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val loaded = Tables.load(spark, dir.toString, "events")
+    val loaded = Tables.load(spark, dir, "events")
     val dt = loaded.schema("ts").dataType
     val instant = loaded.select(unix_micros(col("ts"))).as[Long].head()
     (dt, instant)
