@@ -1674,18 +1674,20 @@ final case class VersionedTable(
     * names. Always parquet (a metadata sidecar, like the DV files, not
     * table data); invisible until a manifest referencing it lands, and
     * an aborted publish leaves it for vacuum's orphan sweep.
+    *
+    * The change query runs once, in the write. "No changes" must still
+    * leave a part file: an empty cdc list would make changeFeed
+    * misclassify the version as pre-enablement and refuse the window.
+    * Spark's file writer guarantees it: a ZERO-partition frame (e.g. a
+    * merge whose source is an empty local relation) is written as one
+    * empty partition, and the first partition of an empty write always
+    * writes its (empty) file. Nothing here inspects the frame's
+    * partitioning first: `df.rdd` on an adaptive plan executes every
+    * shuffle stage of the query just to build the RDD.
     */
   private def writeCdcFiles(changes: DataFrame): Seq[String] = {
     val rel = s"data/cdc-${UUID.randomUUID()}"
-    // a ZERO-partition change frame (e.g. a merge whose source is an
-    // empty local relation) would write no part files at all, leaving
-    // the manifest's cdc list empty — changeFeed would then
-    // misclassify the version as pre-enablement and refuse the window;
-    // force one (empty) part file so "no changes" stays recorded
-    val out =
-      if (changes.rdd.getNumPartitions == 0) changes.repartition(1)
-      else changes
-    out.write.mode(SaveMode.ErrorIfExists).parquet(s"$tableDir/$rel")
+    changes.write.mode(SaveMode.ErrorIfExists).parquet(s"$tableDir/$rel")
     val files = listDataFiles(s"$tableDir/$rel").map(t => s"$rel/${t._1}")
     require(files.nonEmpty,
       s"CDC sidecar write produced no files under $tableDir/$rel")
@@ -2843,11 +2845,13 @@ final case class VersionedTable(
     * stats/bloom columns that batch actually carried — a legal evolving
     * append that omits one simply gets no skipping for its files (they
     * hold nulls there; readers treat missing metadata conservatively).
-    * Every read-back column is cast to its DECLARED type before
-    * aggregation/hashing: the basePath read re-infers partition-column
-    * types (a string partition value "7" comes back as an int), and a
-    * bloom built over the inferred type would disagree with the probe's
-    * manifest-typed hash — pruning files that DO contain the value.
+    * The read-back takes `written` as its schema, so it runs no
+    * schema-inference job. Every read-back column is still cast to its
+    * DECLARED type before aggregation/hashing: a basePath read that
+    * inferred partition-column types would turn a string partition
+    * value "7" into an int, and a bloom built over the inferred type
+    * would disagree with the probe's manifest-typed hash — pruning
+    * files that DO contain the value.
     */
   private def collectFileMeta(commitRel: String, commitAbs: String,
       written: StructType): (FileStats, FileBlooms) = {
@@ -2875,7 +2879,8 @@ final case class VersionedTable(
         case TimestampType => unix_micros(col(c).cast(TimestampType))
         case _ => col(c)
       }).cast(LongType)
-      val back = spark.read.format(format).option("basePath", commitAbs).load(commitAbs)
+      val back = spark.read.format(format).schema(written)
+        .option("basePath", commitAbs).load(commitAbs)
       // ONE read-back pass collects both kinds of skipping metadata:
       // min/max ranges and point-lookup blooms (map-side combinable)
       val aggs = statsCols.flatMap(c => Seq(

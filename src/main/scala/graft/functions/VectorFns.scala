@@ -35,6 +35,14 @@ object VectorFns {
         org.apache.spark.sql.graft.shims.expression(a),
         org.apache.spark.sql.graft.shims.expression(b)))
 
+  /** The `nprobe` IVF cells of vector `v` against unit centroids, most
+    * similar first, the lower cell first on ties. Backed by the native
+    * [[IvfProbeCells]] (the centroids stay out of plan strings).
+    */
+  def ivfProbeCells(v: Column, unitCentroids: Seq[Array[Double]], nprobe: Int): Column =
+    org.apache.spark.sql.graft.shims.column(
+      IvfProbeCells(org.apache.spark.sql.graft.shims.expression(v), unitCentroids.toArray, nprobe))
+
   /** Squared L2 norm. */
   def normSq(a: Column): Column = dot(a, a)
 

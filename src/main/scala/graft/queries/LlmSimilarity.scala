@@ -173,20 +173,31 @@ object LlmSimilarity {
   }
 
   /** nprobe-cell IVF probe + exact-cosine top-k over a cell-tagged
-    * corpus — the shared probe tail of qs03 (in-memory lists) and qs10
-    * (artifact lists). `queries` = (query_id, qe).
+    * corpus — the shared probe of qs03 (in-memory lists), qs10–qs13,
+    * [[readIvfTopK]] and [[ivfSearch]]. `queries` = (query_id, qe).
+    *
+    * One shuffle between the scan and the result:
+    *  - each query's nprobe cells are chosen inside its projection
+    *    ([[graft.functions.IvfProbeCells]], exploded): similarity
+    *    descending, the lower cell first on ties, the order of a
+    *    row_number window over the cells, with no exchange on the
+    *    (broadcast) probe side and no centroid literals in the plan;
+    *  - the scan, the scoring and a per-partition top-k
+    *    (WindowGroupLimit, partial) run in parallel; the survivors are
+    *    hash-shuffled on query_id for the final top-k;
+    *  - the result keeps its (query_id, rank) order without a range
+    *    sort (whose exchange samples its input with an extra job): the
+    *    final top-k stage is coalesced into ONE partition and sorted
+    *    there. That partition reads at most (map partitions × queries ×
+    *    topk) rows and returns at most queries × topk, so a probe batch
+    *    must stay driver-sized — as a collect of its result already is.
     */
   private def ivfRank(corpus: DataFrame, queries: DataFrame,
       centroids: Seq[Array[Double]], nprobe: Int, topk: Int,
       excludeSelf: Boolean = true): DataFrame = {
-    val qs = queries.select(col("query_id"), col("qe"),
-      // ranking by dot-with-unit-centroid == ranking by cosine
-      posexplode(array(centroids.map(c => dot(col("qe"), ivfLitVec(ivfUnit(c)))): _*))
-        .as(Seq("cell", "cell_sim")))
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(col("cell_sim").desc, col("cell"))
-    val probes = qs.withColumn("pr", row_number().over(probeW)).filter(col("pr") <= nprobe)
-      .select(col("query_id"), col("qe"), col("cell"))
+    // ranking by dot-with-unit-centroid == ranking by cosine
+    val probes = queries.select(col("query_id"), col("qe"),
+      explode(ivfProbeCells(col("qe"), centroids.map(ivfUnit), nprobe)).as("cell"))
     // score only the probed cells' lists, exact cosine, top-k
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col("neighbor_id"))
@@ -199,7 +210,8 @@ object LlmSimilarity {
       .withColumn("rank", row_number().over(w).cast(LongType))
       .filter(col("rank") <= topk)
       .select("query_id", "neighbor_id", "rank", "cos_sim")
-      .orderBy("query_id", "rank")
+      .coalesce(1)
+      .sortWithinPartitions("query_id", "rank")
   }
 
   val qs03 = Q("qs03_ann_ivf_topk", Qs03Sql.sql) { (s, dir) =>
@@ -829,18 +841,56 @@ object LlmSimilarity {
   /** Build the IVF artifact: `artifactDir/centroids` (cell, centroid)
     * and `artifactDir/lists` (vec_id, embedding) partitioned by cell —
     * probing nprobe of k cells then scans ~nprobe/k of the corpus via
-    * partition pruning / DPP on the cell dirs.
+    * partition pruning / DPP on the cell dirs. Each table keeps the
+    * schema it was written with (the corpus' own `vec_id` and
+    * `embedding` types) in a `_schema.json` beside its files.
     */
   def writeIvfIndex(s: SparkSession, dir: String, artifactDir: String): Unit = {
     val e = emb(s, dir).persist()
     val centroids = ivfCentroids(e)
-    e.select(col("vec_id"), col("embedding"),
-        ivfBestCell(col("embedding"), centroids).as("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$artifactDir/lists")
-    s.createDataFrame(centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) })
+    val lists = e.select(col("vec_id"), col("embedding"),
+      ivfBestCell(col("embedding"), centroids).as("cell"))
+    lists.write.mode("overwrite").partitionBy("cell").parquet(s"$artifactDir/lists")
+    writeIvfSchema(s, s"$artifactDir/lists", lists.schema)
+    val cents = s.createDataFrame(centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) })
       .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$artifactDir/centroids")
+    cents.coalesce(1).write.mode("overwrite").parquet(s"$artifactDir/centroids")
+    writeIvfSchema(s, s"$artifactDir/centroids", cents.schema)
     e.unpersist(blocking = false)
+  }
+
+  // Each artifact table carries the schema it was written with in a
+  // hidden `_schema.json` (file listings skip `_` names), so a probe
+  // reads the tables with no schema-inference job; an artifact written
+  // without one is read by inference.
+  private def writeIvfSchema(s: SparkSession, table: String, schema: StructType): Unit = {
+    val p = new org.apache.hadoop.fs.Path(table, "_schema.json")
+    val out = p.getFileSystem(s.sessionState.newHadoopConf()).create(p, true)
+    try out.write(schema.json.getBytes("UTF-8")) finally out.close()
+  }
+
+  private def readIvfTable(s: SparkSession, table: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(table, "_schema.json")
+    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+    val schema =
+      if (!fs.exists(p)) None
+      else {
+        val in = fs.open(p)
+        try Some(DataType.fromJson(new String(in.readAllBytes(), "UTF-8")).asInstanceOf[StructType])
+        finally in.close()
+      }
+    schema.fold(s.read)(s.read.schema).parquet(table)
+  }
+
+  /** The artifact's centroid matrix (cell order) and its inverted lists.
+    * Building the pair runs one Spark job, the k-row centroid collect
+    * (driver-bounded by design), sorted on the driver.
+    */
+  private def ivfArtifact(s: SparkSession, artifactDir: String)
+      : (Seq[Array[Double]], DataFrame) = {
+    val centroids = readIvfTable(s, s"$artifactDir/centroids").collect()
+      .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray).toSeq
+    (centroids, readIvfTable(s, s"$artifactDir/lists"))
   }
 
   /** Probe the persisted index: top-`topk` exact-cosine neighbors of the
@@ -849,9 +899,7 @@ object LlmSimilarity {
     */
   def readIvfTopK(s: SparkSession, artifactDir: String,
       nprobe: Int = 4, topk: Int = 5): DataFrame = {
-    val centroids: Seq[Array[Double]] = s.read.parquet(s"$artifactDir/centroids")
-      .orderBy("cell").collect().map(_.getSeq[Double](1).toArray).toSeq
-    val lists = s.read.parquet(s"$artifactDir/lists")
+    val (centroids, lists) = ivfArtifact(s, artifactDir)
     val queries = lists.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     ivfRank(lists.select(col("vec_id"), col("embedding"), col("cell")),
@@ -971,8 +1019,7 @@ object LlmSimilarity {
     */
   def ivfSearch(s: SparkSession, artifactDir: String, queries: DataFrame,
       nprobe: Int = 4, topk: Int = 5): DataFrame = {
-    val centroids: Seq[Array[Double]] = s.read.parquet(s"$artifactDir/centroids")
-      .orderBy("cell").collect().map(_.getSeq[Double](1).toArray).toSeq
+    val (centroids, lists) = ivfArtifact(s, artifactDir)
     def pick(cands: Seq[String], what: String): String =
       cands.flatMap(c => queries.columns.find(_.equalsIgnoreCase(c))).headOption
         .getOrElse(throw new IllegalArgumentException(
@@ -983,7 +1030,6 @@ object LlmSimilarity {
     val vecCol = pick(Seq("qe", "embedding"), "vector")
     val q = queries.select(col(idCol).as("query_id"),
       col(vecCol).cast(ArrayType(FloatType)).as("qe"))
-    val lists = s.read.parquet(s"$artifactDir/lists")
     ivfRank(lists.select(col("vec_id"), col("embedding"), col("cell")),
       q, centroids, nprobe, topk, excludeSelf = false)
   }

@@ -372,4 +372,16 @@ class ChangeFeedSpec extends SparkSuite {
     assert(f == Set((0L, 0L, 0L, "delete", 4L)),
       s"the empty-merge version must serve as zero changes, got $f")
   }
+
+  test("Spark writes one part file for a zero-partition frame (CDC sidecars rely on it)") {
+    val empty = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rows(1).schema)
+    assert(empty.rdd.getNumPartitions == 0)
+    val dir = s"${freshDir()}/out"
+    empty.write.parquet(dir)
+    val parts = new java.io.File(dir).listFiles().map(_.getName)
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+    assert(parts.length == 1, s"want one empty part file, got ${parts.toSeq}")
+    assert(spark.read.parquet(dir).count() == 0)
+  }
 }

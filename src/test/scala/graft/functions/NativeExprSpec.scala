@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -50,6 +51,37 @@ class NativeExprSpec extends SparkSuite {
     assert(row.getLong(0) == PolyHash.hash(
       org.apache.spark.unsafe.types.UTF8String.fromString("abc"), 31L, TextFns.ModBig))
     assert(row.getSeq[String](1) == Seq("a b", "b c", "c d"))
+  }
+
+  test("IvfProbeCells ranks cells as a row_number window over their similarities") {
+    // cells 0 and 2 are the same direction (every vector ties on them);
+    // NaN, null-element and null vectors score NaN or NULL everywhere
+    val cents = Seq(Array(1.0, 0.0), Array(0.0, 1.0), Array(1.0, 0.0), Array(-1.0, 0.0))
+    val vecs = spark.sql("""SELECT * FROM VALUES
+      (0, array(CAST(1 AS FLOAT), CAST(0.5 AS FLOAT))),
+      (1, array(CAST(-1 AS FLOAT), CAST(0 AS FLOAT))),
+      (2, array(CAST(0 AS FLOAT), CAST(0 AS FLOAT))),
+      (3, array(CAST('NaN' AS FLOAT), CAST(1 AS FLOAT))),
+      (4, array(CAST(1 AS FLOAT), CAST(NULL AS FLOAT))),
+      (5, CAST(NULL AS ARRAY<FLOAT>))
+      AS t(id, v)""")
+    for (nprobe <- Seq(0, 1, 2, 4, 6)) {
+      val viaWindow = vecs.select(col("id"),
+          posexplode(array(cents.map(c => VectorFns.dot(col("v"), typedlit(c.toSeq))): _*))
+            .as(Seq("cell", "sim")))
+        .withColumn("pr", row_number().over(
+          Window.partitionBy("id").orderBy(col("sim").desc, col("cell"))))
+        .filter(col("pr") <= nprobe)
+        .select("id", "pr", "cell").orderBy("id", "pr").collect().toSeq
+      val viaNative = vecs.select(col("id"),
+          posexplode(VectorFns.ivfProbeCells(col("v"), cents, nprobe)).as(Seq("p", "cell")))
+        .select(col("id"), (col("p") + 1).as("pr"), col("cell")).orderBy("id", "pr").collect().toSeq
+      assert(viaNative == viaWindow, s"nprobe=$nprobe")
+    }
+    // plans print the centroid count, not the centroids
+    val plan = vecs.select(VectorFns.ivfProbeCells(col("v"), cents, 2)).queryExecution
+      .analyzed.toString
+    assert(plan.contains("ivf_probe_cells(v") && plan.contains("4 cells, nprobe 2"), plan)
   }
 
   test("FloatVecDot matches zip_with/aggregate on float arrays") {
