@@ -776,95 +776,40 @@ final case class VersionedTable(
     publishCow("update", base, m, touched.toSet, rewritten, cdcFiles = cdcFiles)
   }
 
-  /** MERGE (upsert): source rows whose `keys` match a table row REPLACE
-    * that row (`WHEN MATCHED THEN UPDATE SET *`); the rest INSERT
-    * (`WHEN NOT MATCHED THEN INSERT *`). Source must carry exactly the
-    * table's columns (any order) and be key-unique — multiple source
-    * rows for one key would make the result order-dependent, so that
-    * throws, as Delta does. Copy-on-write: only files containing a
-    * matched key are rewritten (matched rows removed by anti-join, all
-    * source rows appended); untouched files carry forward. Null-keyed
-    * table rows never match and survive; null-keyed source rows insert.
-    * Same conflict contract as [[delete]].
+  /** MERGE (upsert): two clauses of [[mergeClauses]] over `keys`,
+    * `WHEN MATCHED THEN UPDATE SET *` and `WHEN NOT MATCHED THEN
+    * INSERT *`. Every table row whose key matches a source row takes
+    * that row's values (a key held by several table rows updates each
+    * of them, as Delta does); the other source rows insert. Source must
+    * carry exactly the table's columns (any order), each of its
+    * declared type, and be key-unique: several source rows for one key
+    * would make the result order-dependent, so that throws, as Delta
+    * does. Null-keyed table rows never match and survive; null-keyed
+    * source rows insert. Same copy-on-write and conflict contract as
+    * [[mergeClauses]].
     */
   def merge(source: DataFrame, keys: Seq[String],
       txn: Option[(String, Long)] = None): Long = {
-    require(keys.nonEmpty, "merge needs at least one key column")
-    val (base, m) = baseSnapshot()
-    val tableCols = m.schema.fieldNames.toSeq
+    val schema = baseSnapshot()._2.schema
+    val tableCols = schema.fieldNames.toSeq
     require(source.columns.sorted.toSeq == tableCols.sorted,
       s"merge source columns ${source.columns.sorted.mkString(",")} must equal " +
         s"table columns ${tableCols.sorted.mkString(",")}")
-    keys.foreach(k => require(tableCols.contains(k), s"merge key $k not in table schema"))
     // schema enforcement like the append path: a silently-failing cast
     // (string "12x" -> bigint null) would corrupt keys instead of
     // erroring, so types must match structurally up front
-    m.schema.foreach { f =>
-      val st = source.schema.fields.find(_.name == f.name).get.dataType
+    schema.foreach { f =>
+      val st = source.schema(f.name).dataType
       require(st.catalogString == f.dataType.catalogString,
         s"merge source column ${f.name} is ${st.simpleString} but the table " +
           s"declares ${f.dataType.simpleString} — cast the source explicitly")
     }
-    // materialized once, as [[mergeClauses]]: the dup check, candidate
-    // pruning, touched-file discovery, rewrite and CDC passes would
-    // otherwise each re-execute the source lineage
-    val src = source.select(m.schema.map(f => col(f.name)): _*).persist()
-    try {
-    // key-uniqueness: one aggregation over the source (cheap next to the
-    // rewrite), because a dup key would non-deterministically pick a
-    // winner. NULL-keyed rows are exempt — they never match any table
-    // row (or each other) in the join, so they all insert deterministically
-    val dups = src.filter(keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col): _*).count().filter(col("count") > 1).limit(1).count()
-    require(dups == 0, s"merge source has duplicate keys on (${keys.mkString(", ")})")
-    // touched files = files holding at least one matched key, discovered
-    // over the stats/bloom-pruned candidates; the semi-join shuffles on
-    // the keys (or broadcasts a small source — AQE's call), and only
-    // distinct FILE NAMES reach the driver. Same broadcast-vs-shuffle
-    // sizing as mergeClauses' discovery: a wave-sized key set probes
-    // the scan side directly instead of shuffling the whole table.
-    val fileC = freshFileCol(m)
-    val mp = src.select(keys.map(col): _*).distinct().persist()
-    val touched = try {
-      val keyed =
-        if (mp.count() <= VersionedTable.BroadcastKeyCap) broadcast(mp) else mp
-      snapshot(m, mergeCandidates(m, keys, src), Some(fileC))
-        .join(keyed, keys, "left_semi")
-        .select(fileC).distinct().collect().map(_.getString(0)).toSeq.sorted
-    } finally mp.unpersist(blocking = false): Unit
-    checkKnown(m, touched)
-    val rewritten =
-      if (touched.isEmpty) src
-      else snapshot(m, touched).join(src.select(keys.map(col): _*), keys, "left_anti")
-        .select(m.schema.map(f => col(f.name)): _*)
-        .unionByName(src)
-    // change data feed: matched table rows -> update_preimage (each —
-    // the upsert replaces EVERY table row of a matched key with the one
-    // source row), matched source rows -> update_postimage, unmatched
-    // source rows -> insert. Joins touch only the touched files, the
-    // same bound as the rewrite itself.
-    val ct = VersionedTable.CdcTypeCol
-    val cdcFiles =
-      if (!cdcEnabled(m)) Seq.empty
-      // nothing rewritten -> the commit's added files ARE the inserted
-      // rows; the feed derives them by file diff (no sidecar, no
-      // doubled write — Delta's CDF rule for appends)
-      else if (touched.isEmpty) Seq.empty
-      else {
-        val tch = snapshot(m, touched)
-        val srcKeys = src.select(keys.map(col): _*)
-        val tKeys = tch.select(keys.map(col): _*)
-        val pre = tch.join(srcKeys, keys, "left_semi")
-          .withColumn(ct, lit("update_preimage"))
-        val post = src.join(tKeys, keys, "left_semi")
-          .withColumn(ct, lit("update_postimage"))
-        val ins = src.join(tKeys, keys, "left_anti")
-          .withColumn(ct, lit("insert"))
-        writeCdcFiles(pre.unionByName(post).unionByName(ins))
-      }
-    publishCow("merge", base, m, touched.toSet, rewritten, txn = txn,
-      cdcFiles = cdcFiles)
-    } finally src.unpersist(blocking = false)
+    import VersionedTable.{MergeInsert, MergeUpdate, MergeWhen}
+    val star = tableCols.map(c => c -> col("s").getField(c)).toMap
+    mergeClauses(source, keys,
+      matched = Seq(MergeWhen(None, MergeUpdate(star))),
+      notMatched = Seq(MergeWhen(None, MergeInsert(star))),
+      txn = txn)
   }
 
   /** Exactly-once streaming upsert commit (the merge twin of
@@ -890,8 +835,8 @@ final case class VersionedTable(
   }
 
   /** The FULL Delta merge clause matrix (`MERGE INTO` with conditional,
-    * multiple, and delete clauses), generalizing the canonical upsert
-    * [[merge]]:
+    * multiple, and delete clauses); every MERGE, [[merge]] and SQL
+    * `MERGE INTO` included, runs here:
     *
     *  - `matched`: ordered `WHEN MATCHED [AND cond] THEN UPDATE/DELETE`
     *    clauses — the first whose condition holds wins; none holding
@@ -907,14 +852,16 @@ final case class VersionedTable(
     * target column's declared type; columns an UPDATE leaves unset keep
     * `t`'s value, columns an INSERT leaves unset become NULL.
     *
-    * Copy-on-write file math mirrors [[merge]]: only files holding a
-    * matched key rewrite (every file, when `notMatchedBySource` clauses
-    * force a whole-target pass; none, for insert-only merges — the
-    * classification anti-join is read-only). A source row matching ANY
-    * target row matches one in a touched file — that is what made the
-    * file touched — so joining the touched files alone classifies every
-    * source row. Same key-uniqueness, null-key, and conflict contracts
-    * as [[merge]].
+    * Copy-on-write: only files holding a matched key rewrite (every
+    * file, when `notMatchedBySource` clauses force a whole-target pass;
+    * none, for insert-only merges — the classification anti-join is
+    * read-only). A source row matching ANY target row matches one in a
+    * touched file — that is what made the file touched — so joining the
+    * touched files alone classifies every source row; untouched files
+    * carry forward. The source must be key-unique over its non-null
+    * keys (a duplicate would pick a nondeterministic winner per target
+    * row, so it throws, as Delta does); null keys match nothing. Same
+    * conflict contract as [[delete]].
     */
   def mergeClauses(source: DataFrame, keys: Seq[String],
       matched: Seq[VersionedTable.MergeWhen],
@@ -966,8 +913,8 @@ final case class VersionedTable(
     // finally so a mid-merge failure cannot strand it in executor cache
     var cdcCache: DataFrame = null
     try {
-    // key-uniqueness over non-null source keys, as [[merge]]: a dup key
-    // would pick a nondeterministic winner per target row
+    // key-uniqueness over non-null source keys: a dup key would pick a
+    // nondeterministic winner per target row
     if (!sourceKeyUnique) {
       val dups = src.filter(keys.map(col(_).isNotNull).reduce(_ && _))
         .groupBy(keys.map(col): _*).count().filter(col("count") > 1).limit(1).count()
@@ -1091,12 +1038,9 @@ final case class VersionedTable(
     // instead of two. At 100 TB a merge whose touched set exceeds the
     // cap keeps the two-pass shape — caching a table-scale join there
     // would trade one columnar re-scan for executor-memory pressure.
-    val cacheJoined = cdcEnabled(m) && rewriteFiles.nonEmpty && {
-      val cap = spark.conf.getOption(VersionedTable.CdcCacheMaxBytesKey)
-        .map(_.toLong).getOrElse(VersionedTable.CdcCacheMaxBytes)
+    val cacheJoined = cdcEnabled(m) && rewriteFiles.nonEmpty &&
       rewriteFiles.forall(m.sizes.contains) &&
-        rewriteFiles.map(m.sizes(_)._1).sum <= cap
-    }
+      rewriteFiles.map(m.sizes(_)._1).sum <= VersionedTable.CdcCacheMaxBytes
     val joinedC = if (cacheJoined) { cdcCache = joined.persist(); cdcCache }
       else joined
     val tp = coalesce(col(tpC), lit(false))
@@ -3508,13 +3452,11 @@ object VersionedTable {
   /** Cap (bytes, manifest-recorded sizes of the touched files) under
     * which a CDC-enabled merge caches its classify join for the
     * rewrite + sidecar passes instead of scanning the touched files
-    * twice. Runtime-overridable per cluster via
-    * [[CdcCacheMaxBytesKey]]; 256 MiB keeps the cached two-struct rows
-    * comfortably inside one executor's storage fraction while covering
-    * every wave-sized merge.
+    * twice. 256 MiB keeps the cached two-struct rows comfortably
+    * inside one executor's storage fraction while covering every
+    * wave-sized merge.
     */
   val CdcCacheMaxBytes: Long = 256L << 20
-  val CdcCacheMaxBytesKey: String = "graft.merge.cdcCacheMaxBytes"
 
   /** Ops whose commit changes table DATA (vs metadata/compaction) —
     * the set auto-compaction may trigger after.

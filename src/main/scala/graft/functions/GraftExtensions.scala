@@ -100,7 +100,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectResolutionRule(session => graft.sql.GraftViewRule(session))
     // SQL UPDATE / MERGE INTO for catalog tables — converts the
     // resolved commands into eager copy-on-write library ops
-    // (graft.sql.GraftDmlRule; canonical upsert only, refuses the rest).
+    // (graft.sql.GraftDmlRule; the full WHEN clause matrix over
+    // same-name key equalities, other ON shapes refuse).
     ext.injectResolutionRule(session => graft.sql.GraftDmlRule(session))
     // DESCRIBE HISTORY as a table-valued function (Delta's
     // `DESCRIBE HISTORY` surface): SELECT * FROM graft_history('/dir').

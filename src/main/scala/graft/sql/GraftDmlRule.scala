@@ -15,16 +15,14 @@ import graft.ecom.VersionedTable
 /** SQL `UPDATE` and `MERGE INTO` for catalog tables, completing the DML
   * surface (INSERT/CTAS/DELETE/TRUNCATE are elsewhere): the resolved
   * command converts to an eager command that runs the library's
-  * copy-on-write [[VersionedTable.update]]/[[VersionedTable.merge]] —
-  * one atomic version, untouched files carried forward, history intact.
+  * copy-on-write [[VersionedTable.update]]/[[VersionedTable.mergeClauses]]
+  * — one atomic version, untouched files carried forward, history intact.
   * The Delta architecture again: Spark resolves names and expressions,
   * the library owns the rewrite semantics, nothing is implemented twice.
   *
   * MERGE supports the FULL Delta clause matrix over an `ON` conjunction
-  * of same-name target/source key equalities: the canonical upsert
-  * (`UPDATE SET *` + `INSERT *`) routes through the library's
-  * [[VersionedTable.merge]]; conditional, multiple, DELETE, and
-  * NOT MATCHED BY SOURCE clauses translate to
+  * of same-name target/source key equalities: every statement, the
+  * `UPDATE SET *` + `INSERT *` upsert included, translates to
   * [[VersionedTable.mergeClauses]] with every clause expression
   * re-expressed over the library's `t`/`s` row structs. Only
   * non-equi-key ON conditions refuse (with a message naming the
@@ -94,74 +92,48 @@ case class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
                 (targetOut.contains(b) && sourceOut.contains(a))) => Seq(a.name)
         case other => refuse(s"unsupported ON clause ${other.sql}")
       }
-      // a replace-whole-row assignment list: every target column set
-      // from the same-named source column (what SET * / INSERT * expand to)
-      def wholeRow(assigns: Seq[Assignment]): Boolean = {
-        val pairs = assigns.map {
-          case Assignment(k: Attribute, v: AttributeReference)
-              if sourceOut.contains(v) => k.name.toLowerCase -> v.name.toLowerCase
-          case _ => return false
-        }
-        pairs.forall { case (k, v) => k == v } &&
-          pairs.map(_._1).toSet == t.schema().fieldNames.map(_.toLowerCase).toSet
+      // re-express a resolved clause expression over the t/s row
+      // structs mergeClauses evaluates against
+      def overTs(e: Expression, what: String): Column = {
+        require(e.deterministic, s"$what must be deterministic")
+        require(e.find(_.isInstanceOf[SubqueryExpression]).isEmpty,
+          s"$what must not contain a subquery")
+        shims.column(e.transform {
+          case a: AttributeReference if targetOut.contains(a) =>
+            UnresolvedAttribute(Seq("t", a.name))
+          case a: AttributeReference if sourceOut.contains(a) =>
+            UnresolvedAttribute(Seq("s", a.name))
+        })
       }
-      // the canonical upsert routes through the library's merge() (the
-      // schema-equality shape, pinned by qv11); EVERY other clause
-      // combination translates to mergeClauses' matrix
-      val canonical = bySource.isEmpty && (matched match {
-        case Seq(UpdateStarAction(None)) => true
-        case Seq(UpdateAction(None, assigns, _)) if wholeRow(assigns) => true
-        case _ => false
-      }) && (notMatched match {
-        case Seq(InsertStarAction(None)) => true
-        case Seq(InsertAction(None, assigns)) if wholeRow(assigns) => true
-        case _ => false
-      })
-      if (canonical) GraftMergeCommand(t, source, keysOf(cond).distinct)
-      else {
-        // re-express a resolved clause expression over the t/s row
-        // structs mergeClauses evaluates against
-        def overTs(e: Expression, what: String): Column = {
-          require(e.deterministic, s"$what must be deterministic")
-          require(e.find(_.isInstanceOf[SubqueryExpression]).isEmpty,
-            s"$what must not contain a subquery")
-          shims.column(e.transform {
-            case a: AttributeReference if targetOut.contains(a) =>
-              UnresolvedAttribute(Seq("t", a.name))
-            case a: AttributeReference if sourceOut.contains(a) =>
-              UnresolvedAttribute(Seq("s", a.name))
-          })
-        }
-        def assignsOf(assigns: Seq[Assignment], what: String): Map[String, Column] =
-          assigns.map {
-            case Assignment(k: Attribute, v) => k.name -> overTs(v, s"$what ${k.name}")
-            case Assignment(k, _) => refuse(
-              s"$what: only plain column assignments are supported, got $k")
-          }.toMap
-        def starSet: Map[String, Column] =
-          t.schema().fieldNames.toSeq
-            .map(n => n -> shims.column(UnresolvedAttribute(Seq("s", n)))).toMap
-        def whens(actions: Seq[org.apache.spark.sql.catalyst.plans.logical.MergeAction],
-            group: String): Seq[VersionedTable.MergeWhen] = actions.map {
-          case UpdateStarAction(c) => VersionedTable.MergeWhen(
-            c.map(overTs(_, s"$group AND")), VersionedTable.MergeUpdate(starSet))
-          case UpdateAction(c, assigns, _) => VersionedTable.MergeWhen(
-            c.map(overTs(_, s"$group AND")),
-            VersionedTable.MergeUpdate(assignsOf(assigns, s"$group UPDATE SET")))
-          case DeleteAction(c) => VersionedTable.MergeWhen(
-            c.map(overTs(_, s"$group AND")), VersionedTable.MergeDelete)
-          case InsertStarAction(c) => VersionedTable.MergeWhen(
-            c.map(overTs(_, s"$group AND")), VersionedTable.MergeInsert(starSet))
-          case InsertAction(c, assigns) => VersionedTable.MergeWhen(
-            c.map(overTs(_, s"$group AND")),
-            VersionedTable.MergeInsert(assignsOf(assigns, s"$group INSERT")))
-          case other => refuse(s"unsupported $group clause: $other")
-        }
-        GraftMergeMatrixCommand(t, source, keysOf(cond).distinct,
-          whens(matched, "WHEN MATCHED"),
-          whens(notMatched, "WHEN NOT MATCHED"),
-          whens(bySource, "WHEN NOT MATCHED BY SOURCE"))
+      def assignsOf(assigns: Seq[Assignment], what: String): Map[String, Column] =
+        assigns.map {
+          case Assignment(k: Attribute, v) => k.name -> overTs(v, s"$what ${k.name}")
+          case Assignment(k, _) => refuse(
+            s"$what: only plain column assignments are supported, got $k")
+        }.toMap
+      def starSet: Map[String, Column] =
+        t.schema().fieldNames.toSeq
+          .map(n => n -> shims.column(UnresolvedAttribute(Seq("s", n)))).toMap
+      def whens(actions: Seq[org.apache.spark.sql.catalyst.plans.logical.MergeAction],
+          group: String): Seq[VersionedTable.MergeWhen] = actions.map {
+        case UpdateStarAction(c) => VersionedTable.MergeWhen(
+          c.map(overTs(_, s"$group AND")), VersionedTable.MergeUpdate(starSet))
+        case UpdateAction(c, assigns, _) => VersionedTable.MergeWhen(
+          c.map(overTs(_, s"$group AND")),
+          VersionedTable.MergeUpdate(assignsOf(assigns, s"$group UPDATE SET")))
+        case DeleteAction(c) => VersionedTable.MergeWhen(
+          c.map(overTs(_, s"$group AND")), VersionedTable.MergeDelete)
+        case InsertStarAction(c) => VersionedTable.MergeWhen(
+          c.map(overTs(_, s"$group AND")), VersionedTable.MergeInsert(starSet))
+        case InsertAction(c, assigns) => VersionedTable.MergeWhen(
+          c.map(overTs(_, s"$group AND")),
+          VersionedTable.MergeInsert(assignsOf(assigns, s"$group INSERT")))
+        case other => refuse(s"unsupported $group clause: $other")
       }
+      GraftMergeMatrixCommand(t, source, keysOf(cond).distinct,
+        whens(matched, "WHEN MATCHED"),
+        whens(notMatched, "WHEN NOT MATCHED"),
+        whens(bySource, "WHEN NOT MATCHED BY SOURCE"))
   }
 }
 
@@ -172,23 +144,6 @@ case class GraftUpdateCommand(t: GraftSqlTable, set: Map[String, Column],
     t.pinnedVersion.foreach(v => throw new IllegalArgumentException(
       s"cannot UPDATE ${t.name()} VERSION AS OF $v — time travel is read-only"))
     t.vt.update(cond, set)
-    Seq.empty
-  }
-}
-
-/** Eager canonical-upsert `MERGE INTO`. The source plan re-analyzes as
-  * a standalone frame; column order/extra columns align by selecting
-  * the table schema (merge itself enforces types and key uniqueness).
-  */
-case class GraftMergeCommand(t: GraftSqlTable, source: LogicalPlan,
-    keys: Seq[String]) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    t.pinnedVersion.foreach(v => throw new IllegalArgumentException(
-      s"cannot MERGE INTO ${t.name()} VERSION AS OF $v — time travel is read-only"))
-    val src = shims.dataFrame(spark, source)
-      .select(t.schema().fieldNames.toIndexedSeq
-        .map(n => org.apache.spark.sql.functions.col(n)): _*)
-    t.vt.merge(src, keys)
     Seq.empty
   }
 }
@@ -207,11 +162,11 @@ case class GraftAddConstraintCommand(t: GraftSqlTable, name: String,
   }
 }
 
-/** Eager full-clause-matrix `MERGE INTO` — conditional/multiple
-  * WHEN MATCHED (UPDATE/DELETE), conditional NOT MATCHED inserts, and
-  * NOT MATCHED BY SOURCE, running [[VersionedTable.mergeClauses]]. The
-  * source keeps ALL its columns (clause expressions reference them
-  * through the `s` row struct).
+/** Eager `MERGE INTO` — conditional/multiple WHEN MATCHED
+  * (UPDATE/DELETE), conditional NOT MATCHED inserts, and NOT MATCHED
+  * BY SOURCE, running [[VersionedTable.mergeClauses]]. The source
+  * keeps ALL its columns (clause expressions reference them through
+  * the `s` row struct).
   */
 case class GraftMergeMatrixCommand(t: GraftSqlTable, source: LogicalPlan,
     keys: Seq[String],

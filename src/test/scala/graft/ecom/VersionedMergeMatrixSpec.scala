@@ -118,6 +118,23 @@ class VersionedMergeMatrixSpec extends SparkSuite {
     assert(ex2.getMessage.contains("cast the source explicitly"))
   }
 
+  test("a key-unique upsert into a CDC table stays within its job budget") {
+    val vt = seeded()
+    vt.setTableProperty(VersionedTable.CdcEnabledProp, "true")
+    val v = vt.currentVersion().get
+    // 390..399 update (one touched file), 400..409 insert
+    val src = spark.range(390, 410).toDF("id")
+      .withColumn("qty", lit(7L)).withColumn("tag", lit("new"))
+    // the upsert's cost today; a rise means the merge grew a pass
+    val (_, jobs) = jobsDuring(vt.merge(src, Seq("id")))
+    assert(jobs <= 18, s"upsert ran $jobs Spark jobs")
+    assert(vt.read().count() == 410)
+    val kinds = vt.changeFeed(v + 1).groupBy(VersionedTable.CdcTypeCol).count()
+      .as[(String, Long)].collect().toMap
+    assert(kinds == Map("update_preimage" -> 10L, "update_postimage" -> 10L,
+      "insert" -> 10L))
+  }
+
   test("matrix merge is one atomic version; pre-merge snapshot time-travels") {
     val vt = seeded()
     val v1 = vt.currentVersion().get

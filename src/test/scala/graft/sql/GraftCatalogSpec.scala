@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions.col
 
 import graft.SparkSuite
 import graft.ecom.VersionedTable
+import graft.ecom.VersionedTable.{MergeInsert, MergeUpdate, MergeWhen}
 
 /** The SQL face of the versioned format: a GraftCatalog-registered
   * warehouse makes every versioned table addressable by NAME from plain
@@ -304,6 +305,30 @@ class GraftCatalogSpec extends SparkSuite {
     assert(spark.sql("SELECT n FROM graft.dml2.m WHERE id = 3")
       .collect().head.getLong(0) == 30L, "unmatched table rows survive")
     assert(vt.history().last.op == "merge")
+
+    // a target holding a key twice: the source row updates EACH matched
+    // row (Delta's semantics), whichever way the upsert is spelled
+    def upserted(name: String)(upsert: VersionedTable => Unit): Seq[(Long, String)] = {
+      val dvt = VersionedTable(spark, s"$warehouse/dml2/$name")
+      dvt.commitOverwrite(Seq((1L, "a"), (1L, "b"), (2L, "c")).toDF("id", "v"))
+      upsert(dvt)
+      spark.table(s"graft.dml2.$name").as[(Long, String)].collect().sorted.toSeq
+    }
+    def sqlUpsert(name: String, matched: String): Unit = spark.sql(
+      s"""MERGE INTO graft.dml2.$name t
+         |USING (SELECT * FROM VALUES (1L, 'x'), (3L, 'y') AS src(id, v)) s
+         |ON t.id = s.id
+         |WHEN $matched THEN UPDATE SET *
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    val dupSrc = Seq((1L, "x"), (3L, "y")).toDF("id", "v")
+    val star = Map("id" -> col("s.id"), "v" -> col("s.v"))
+    val want = Seq((1L, "x"), (1L, "x"), (2L, "c"), (3L, "y"))
+    assert(upserted("dup_set")(_ => sqlUpsert("dup_set", "MATCHED")) == want)
+    assert(upserted("dup_cond")(_ => sqlUpsert("dup_cond", "MATCHED AND true")) == want)
+    assert(upserted("dup_lib")(_.merge(dupSrc, Seq("id"))) == want)
+    assert(upserted("dup_clauses")(_.mergeClauses(dupSrc, Seq("id"),
+      matched = Seq(MergeWhen(None, MergeUpdate(star))),
+      notMatched = Seq(MergeWhen(None, MergeInsert(star))))) == want)
 
     // a non-equi-key ON shape still refuses with a pointer to the API
     val ex = intercept[Exception] {
